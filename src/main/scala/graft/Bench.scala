@@ -11,6 +11,12 @@ case class BenchTimes(cold: Double, median: Double, min: Double,
 
 object Bench {
 
+  /** `ref_drift` as a JSON number: formatted in the root locale, since
+    * a comma-decimal default locale would make the line invalid JSON.
+    */
+  private[graft] def refDriftJson(drift: Option[Double]): String =
+    drift.map("%.3f".formatLocal(java.util.Locale.ROOT, _)).getOrElse("null")
+
   /** Force full evaluation of EVERY output column. A bare `count()`
     * lets Catalyst prune the final projection, so entries whose cost
     * lives in projected expressions (regex redaction, quantized
@@ -204,9 +210,8 @@ object Bench {
       }.sorted
       if (ratios.isEmpty) None else Some(ratios(ratios.length / 2))
     }
-    val refDriftJson = refDrift.map(d => f"$d%.3f").getOrElse("null")
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":$gateErrors,"n_extra_errors":${errors.size - gateErrors},"warm_iters":$warmIters,"ref_drift":$refDriftJson,"queries":${objOf(headline)(_.median)},"slowest":${objOf(slowest)(_.median)},"detail":"bench_out.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":$gateErrors,"n_extra_errors":${errors.size - gateErrors},"warm_iters":$warmIters,"ref_drift":${refDriftJson(refDrift)},"queries":${objOf(headline)(_.median)},"slowest":${objOf(slowest)(_.median)},"detail":"bench_out.json","sf":"$sfDir"}"""
     println(compact)
     if (errors.nonEmpty) System.err.println(
       s"BENCH: ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")

@@ -1340,10 +1340,8 @@ object PipelineQueries {
   // benchmark side's shingles become a broadcast Bloom filter applied
   // map-side to the train scan before any shuffle. Results are exact
   // (false positives die in the equi-join), so the oracle is ct1's.
-  // GATE-RETIRED r13-note/r12: its oracle was ct1Sql VERBATIM — the
-  // hash match proved ct1-equivalence, the same redundancy qp1/qp2
-  // had. Benched as ct2x extra; the Bloom plan shape and exactness
-  // stay pinned in PipelineSpec/PlanSpec.
+  // A gate entry: its hash match against ct1Sql proves the Bloom path
+  // ct1-equivalent, and PipelineSpec pins it to the plain path.
   val ct2BloomContamination: Q = (s, dir) => {
     val d = docs(s, dir).select("doc_id", "text")
     val evalDocs = d.filter(col("doc_id") < 50)
@@ -2846,12 +2844,9 @@ object PipelineQueries {
   // Per-source quality-percentile cut: keep the top stopword-ratio
   // quartile of EACH source. percent_rank over a unique (score, id)
   // ordering is a single exact division — deterministic both sides.
-  // SPEC-ONLY since r12: qp2 (the window-free scalable form) carries
-  // the gate; qp1 ≡ qp2 was oracle-proven through r11 (both
-  // hash-green against the SAME window-form oracle) and stays pinned
-  // by PipelineSpec's "identical keep set to the window form" tests —
-  // retiring the redundant entry keeps the per-round gate wall time
-  // flat (r11 verdict item 7).
+  // A gate entry beside qp2 (the window-free scalable form): both are
+  // hash-checked against the same window-form oracle, and PipelineSpec
+  // pins their identical keep sets.
   val qp1Percentile: Q = (s, dir) =>
     pipeline.Curation.qualityPercentileFilter(
       docs(s, dir).select("doc_id", "source", "text"),

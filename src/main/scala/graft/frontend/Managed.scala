@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
+import graft.pipeline.Lineage
 
 import Syntax._
 import Analyzer._
@@ -180,7 +181,7 @@ final class ManagedEngine(
       val cols = returning.collect { case FieldE(Some(n), e, true) => (n, e) }
       val proj = Lowering.projectWithSubqueries(ctx, nsFrame, cols)
       if (cols.exists { case (_, e) => Lowering.containsSubquery(e) })
-        proj.localCheckpoint(true)
+        Lineage.truncate(proj)
       else proj
     }
   }
@@ -370,7 +371,7 @@ final class ManagedEngine(
     }
     // materialize before the swap: RETURNING must observe the
     // pre-write state, not lazily recompute over the new files
-    val inserted = finalNew.localCheckpoint(true)
+    val inserted = Lineage.truncate(finalNew)
     // RETURNING is built (and, with subqueries, materialized) BEFORE
     // the swap so it observes pre-write state
     val ret = returningProjection(ctx,
@@ -400,7 +401,7 @@ final class ManagedEngine(
     val deleted0 = Lowering.dropSubqueryFlags(
       withPred.filter(coalesce(cond, lit(false))))
     val deleted =
-      if (d.returning.isEmpty) deleted0 else deleted0.localCheckpoint(true)
+      if (d.returning.isEmpty) deleted0 else Lineage.truncate(deleted0)
     val kept = Lowering.dropSubqueryFlags(
       withPred.filter(!coalesce(cond, lit(false))))
     // RETURNING first (pre-write observation), then the swap
@@ -473,7 +474,7 @@ final class ManagedEngine(
     // materialized only when RETURNING will lazily read it after the
     // swap; a plain UPDATE computes it once, inside the write
     val postNs =
-      if (u.returning.isEmpty) postNs0 else postNs0.localCheckpoint(true)
+      if (u.returning.isEmpty) postNs0 else Lineage.truncate(postNs0)
     val updatedRows = postNs.select(existing.columns.map(c =>
       col(s"${u.table}__$c").as(c)).toIndexedSeq: _*)
     // anti-join on the PRE-update key values: when SET touches a

@@ -27,20 +27,16 @@ object Cluster {
     * aggregation, and the materializing `max(changed)` aggregate both
     * populates the round's cache and answers "did anything move" — no
     * separate probe job. Lineage is truncated every `checkpointEvery`
-    * rounds; pass `reliableCheckpoints = true` on a real cluster
-    * (localCheckpoint pins blocks to executors — a lost executor kills
-    * the job; reliable checkpoints survive it, at the cost of writing
-    * to `spark.sparkContext.setCheckpointDir`).
+    * rounds (see [[Lineage]]).
     *
     * Throws on non-convergence within `maxIters` — silently returning
     * partially-propagated labels would hand the caller wrong clusters.
     */
   def connectedComponents(pairs: DataFrame, id1: String = "id1",
       id2: String = "id2", maxIters: Int = 20,
-      checkpointEvery: Int = 3,
-      reliableCheckpoints: Boolean = false): DataFrame = {
+      checkpointEvery: Int = 3): DataFrame = {
     val (labels, stats) = connectedComponentsWithStats(pairs, id1, id2,
-      maxIters, checkpointEvery, reliableCheckpoints)
+      maxIters, checkpointEvery)
     if (!stats.converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIters rounds — " +
         "labels are partial; raise maxIters")
@@ -55,15 +51,12 @@ object Cluster {
   def connectedComponentsWithStats(pairs: DataFrame, id1: String = "id1",
       id2: String = "id2", maxIters: Int = 20,
       checkpointEvery: Int = 3,
-      reliableCheckpoints: Boolean = false,
       onRound: (Int, Boolean) => Unit = (_, _) => ()): (DataFrame, CcStats) = {
-    def truncate(df: DataFrame): DataFrame =
-      Lineage.truncate(df, reliableCheckpoints)
-    val edges = truncate(pairs
+    val edges = Lineage.truncate(pairs
       .select(col(id1).as("src"), col(id2).as("dst"))
       .unionByName(pairs.select(col(id2).as("src"), col(id1).as("dst")))
       .distinct())
-    var labels = truncate(edges.select(col("src").as("id"))
+    var labels = Lineage.truncate(edges.select(col("src").as("id"))
       .distinct()
       .withColumn("cluster_id", col("id")))
     var iter = 0
@@ -105,7 +98,7 @@ object Cluster {
         if (!converged && (iter + 1) % checkpointEvery == 0) {
           // periodic lineage cut: the cached plans still nest one level
           // per round; a checkpoint resets plan depth
-          val flat = truncate(fresh)
+          val flat = Lineage.truncate(fresh)
           next.unpersist(false)
           toFree = None
           flat
@@ -114,7 +107,7 @@ object Cluster {
       onRound(iter, converged)
     }
     // materialize the result off the round cache before freeing it
-    val out = truncate(labels)
+    val out = Lineage.truncate(labels)
     toFree.foreach(_.unpersist(false))
     (out, CcStats(iter, converged))
   }

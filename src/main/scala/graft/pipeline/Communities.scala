@@ -41,8 +41,8 @@ object Communities {
     * pair folds associatively, so the argmax needs no window and no
     * sort. Per-round shuffle volume is O(|E|) vote rows collapsing to
     * O(|V|) — never all-pairs, no driver-side loop over rows.
-    * Lineage is truncated every `checkpointEvery` rounds (pass
-    * `reliableCheckpoints = true` on a real cluster, see [[Lineage]]).
+    * Lineage is truncated every `checkpointEvery` rounds (see
+    * [[Lineage]]).
     *
     * Runs a FIXED `iters` rounds (LPA has no monotone convergence
     * guarantee; production runs use a small fixed budget — labels
@@ -51,16 +51,13 @@ object Communities {
     */
   def labelPropagation(pairs: DataFrame, id1: String = "id1",
       id2: String = "id2", iters: Int = 4,
-      checkpointEvery: Int = 3,
-      reliableCheckpoints: Boolean = false): DataFrame = {
+      checkpointEvery: Int = 3): DataFrame = {
     require(iters >= 1, s"labelPropagation needs >= 1 round, got $iters")
-    def truncate(df: DataFrame): DataFrame =
-      Lineage.truncate(df, reliableCheckpoints)
     // symmetrized edge set materialized ONCE (r12 optimization): it
     // feeds three derivations (both arms of the self-loop union and
     // the initial label frame), which as separate truncate actions
     // each recomputed the caller's pair build + distinct
-    val sym = truncate(pairs
+    val sym = Lineage.truncate(pairs
       .select(col(id1).cast("long").as("src"), col(id2).cast("long").as("dst"))
       .unionByName(pairs.select(col(id2).cast("long").as("src"),
         col(id1).cast("long").as("dst")))
@@ -70,11 +67,11 @@ object Communities {
     // obvious neighbor-votes ∪ self-votes shape whose double reference
     // doubles the lazy plan per round between checkpoints — the same
     // failure family Graph.pageRank's fixpoint probe works around
-    val edges = truncate(sym
+    val edges = Lineage.truncate(sym
       .unionByName(sym.select(col("src")).distinct()
         .select(col("src"), col("src").as("dst")))
       .repartition(col("src")))
-    var labels = truncate(
+    var labels = Lineage.truncate(
       sym.select(col("src").as("node")).distinct()
         .withColumn("lbl", col("node")))
     for (i <- 1 to iters) {
@@ -88,7 +85,8 @@ object Communities {
         .groupBy("node")
         .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("w"))
         .select(col("node"), (-col("w.nl")).as("lbl"))
-      if (i % checkpointEvery == 0 && i < iters) labels = truncate(labels)
+      if (i % checkpointEvery == 0 && i < iters)
+        labels = Lineage.truncate(labels)
     }
     labels.select(col("node"), col("lbl").as("community"))
   }
@@ -121,13 +119,10 @@ object Communities {
     * last round's drop count).
     */
   def kCore(pairs: DataFrame, id1: String = "id1", id2: String = "id2",
-      k: Int = 3, rounds: Int = 12, checkpointEvery: Int = 3,
-      reliableCheckpoints: Boolean = false): DataFrame = {
+      k: Int = 3, rounds: Int = 12, checkpointEvery: Int = 3): DataFrame = {
     require(k >= 1, s"kCore needs k >= 1, got $k")
     require(rounds >= 1, s"kCore needs rounds >= 1, got $rounds")
-    def truncate(df: DataFrame): DataFrame =
-      Lineage.truncate(df, reliableCheckpoints)
-    var live = truncate(pairs
+    var live = Lineage.truncate(pairs
       .select(col(id1).cast("long").as("src"), col(id2).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .unionByName(pairs.select(col(id2).cast("long").as("src"),
@@ -142,7 +137,8 @@ object Communities {
         .join(keep.withColumnRenamed("__keep", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("__keep", "dst"), Seq("dst"), "left_semi")
         .select("src", "dst")
-      if (r % checkpointEvery == 0 && r < rounds) live = truncate(live)
+      if (r % checkpointEvery == 0 && r < rounds)
+        live = Lineage.truncate(live)
     }
     live.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("core_deg"))
@@ -163,25 +159,20 @@ object Communities {
     * (one cheap action on a shrinking frame) makes the final union a
     * flat read of `rounds + 1` one-row aggregates. Note this makes
     * construction EAGER: rounds+1 materialization jobs run before the
-    * returned frame is acted on, and with the default
-    * `reliableCheckpoints = false` the round frames are pinned to
-    * executor storage with no recomputation path on executor loss —
-    * pass `true` on a real cluster. (A `checkpointEvery` parameter
-    * existed through r12 but bounded nothing once every round
-    * truncates; it was removed rather than left as a dead knob.)
+    * returned frame is acted on; where the round frames are stored
+    * follows the session policy in [[Lineage]]. (A `checkpointEvery`
+    * parameter existed through r12 but bounded nothing once every
+    * round truncates; it was removed rather than left as a dead knob.)
     */
   def kCoreProfile(pairs: DataFrame, id1: String = "id1",
-      id2: String = "id2", k: Int = 3, rounds: Int = 6,
-      reliableCheckpoints: Boolean = false): DataFrame = {
+      id2: String = "id2", k: Int = 3, rounds: Int = 6): DataFrame = {
     require(k >= 1, s"kCoreProfile needs k >= 1, got $k")
     require(rounds >= 1, s"kCoreProfile needs rounds >= 1, got $rounds")
-    def truncate(df: DataFrame): DataFrame =
-      Lineage.truncate(df, reliableCheckpoints)
     def stats(round: Int, live: DataFrame): DataFrame =
       live.agg(expr("count(DISTINCT src)").as("nodes"),
         expr("count(1) DIV 2").as("edges"))
         .select(lit(round).as("round"), col("nodes"), col("edges"))
-    var live = truncate(pairs
+    var live = Lineage.truncate(pairs
       .select(col(id1).cast("long").as("src"), col(id2).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .unionByName(pairs.select(col(id2).cast("long").as("src"),
@@ -193,7 +184,7 @@ object Communities {
     for (r <- 1 to rounds) {
       val keep = live.groupBy("src").agg(count(lit(1)).as("__c"))
         .filter(col("__c") >= k).select(col("src").as("__keep"))
-      live = truncate(live
+      live = Lineage.truncate(live
         .join(keep.withColumnRenamed("__keep", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("__keep", "dst"), Seq("dst"), "left_semi")
         .select("src", "dst"))
@@ -225,18 +216,12 @@ object Communities {
     *
     * Since the r12 optimization this operator runs eager Spark jobs at
     * CONSTRUCTION (the edge/degree/oriented frames are materialized to
-    * truncate the caller's upstream plan out of every reference), and
-    * with the default `reliableCheckpoints = false` those O(|E|)
-    * frames are pinned to executor storage with no recomputation path
-    * on executor loss — the same trade its iterative siblings make,
-    * but new for a one-shot operator. Pass `reliableCheckpoints =
-    * true` on a cluster where executors can be lost mid-job.
+    * truncate the caller's upstream plan out of every reference);
+    * where those O(|E|) frames are stored follows the session policy
+    * in [[Lineage]], as for its iterative siblings.
     */
   def triangleStats(pairs: DataFrame, id1: String = "id1",
-      id2: String = "id2",
-      reliableCheckpoints: Boolean = false): DataFrame = {
-    def truncate(df: DataFrame): DataFrame =
-      Lineage.truncate(df, reliableCheckpoints)
+      id2: String = "id2"): DataFrame = {
     // canonical undirected edge set: (a < b), deduped, no self-loops.
     // e, deg and oriented are each referenced 2-3 times downstream
     // (deg twice in the orientation join and once in the output join;
@@ -246,12 +231,12 @@ object Communities {
     // gate entry's initial plan carried 564 parquet scans), leaving
     // dedup to runtime stage reuse and paying plan/optimizer cost
     // proportional to the replication either way.
-    val e = truncate(pairs
+    val e = Lineage.truncate(pairs
       .select(least(col(id1).cast("long"), col(id2).cast("long")).as("a"),
         greatest(col(id1).cast("long"), col(id2).cast("long")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct())
-    val deg = truncate(e.select(col("a").as("node"))
+    val deg = Lineage.truncate(e.select(col("a").as("node"))
       .unionByName(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg")))
     // orient each edge from the lower (deg, node) endpoint to the
@@ -261,7 +246,7 @@ object Communities {
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
     val lowFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = truncate(withDeg.select(
+    val oriented = Lineage.truncate(withDeg.select(
       when(lowFirst, col("a")).otherwise(col("b")).as("u"),
       when(lowFirst, col("b")).otherwise(col("a")).as("v"),
       when(lowFirst, col("da")).otherwise(col("db")).as("du"),

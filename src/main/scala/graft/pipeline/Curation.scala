@@ -93,10 +93,8 @@ object Curation {
     * per-cluster funnel.
     */
   def selectKeepers(docs: DataFrame, pairs: DataFrame, idCol: String,
-      qualityCol: String,
-      reliableCheckpoints: Boolean = false): DataFrame = {
-    val labels = Cluster.connectedComponents(pairs,
-      reliableCheckpoints = reliableCheckpoints)
+      qualityCol: String): DataFrame = {
+    val labels = Cluster.connectedComponents(pairs)
       .withColumnRenamed("id", idCol)
     val labeled = docs.join(labels, Seq(idCol), "left_outer")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
@@ -126,13 +124,11 @@ object Curation {
   def semanticDedup(docs: DataFrame, idCol: String, vecCol: String,
       qualityCol: String, minCosine: Double = 0.9, bands: Int = 4,
       bitsPerBand: Int = 8, seed: Long = 42L, dims: Int = 0,
-      maxBucketSize: Int = 1000,
-      reliableCheckpoints: Boolean = false): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame = {
     val pairs = Similarity.cosineNearDupPairs(
       docs.select(col(idCol), col(vecCol)), idCol, vecCol, minCosine,
       bands, bitsPerBand, seed, dims, maxBucketSize)
-    selectKeepers(docs, pairs.select("id1", "id2"), idCol, qualityCol,
-      reliableCheckpoints = reliableCheckpoints)
+    selectKeepers(docs, pairs.select("id1", "id2"), idCol, qualityCol)
   }
 
   /** Per-source summary of a curation pass (the report a data-quota

@@ -334,7 +334,6 @@ object Dedup {
       minEstJaccard: Double = 0.5,
       maxBucketSize: Int = 200,
       portable: Boolean = false,
-      reliableCheckpoints: Boolean = false,
       carryPayload: Boolean = true): DataFrame = {
     val sig = minhashSignatures(df, idCol, textCol, shingleWidth, numHashes,
       portable).cache()
@@ -394,8 +393,7 @@ object Dedup {
     val pairs = Lineage.truncate(candidates
       .select(col("id1"), col("id2"),
         (agree.cast("double") / lit(numHashes)).as("est_jaccard"))
-      .filter(col("est_jaccard") >= minEstJaccard),
-      reliableCheckpoints)
+      .filter(col("est_jaccard") >= minEstJaccard))
     sig.unpersist(false)
     pairs
   }
@@ -421,8 +419,7 @@ object Dedup {
       shingleWidth: Int = 3, numHashes: Int = 32, bands: Int = 8,
       minEstJaccard: Double = 0.5,
       maxBucketSize: Int = 200,
-      portable: Boolean = false,
-      reliableCheckpoints: Boolean = false): DataFrame = {
+      portable: Boolean = false): DataFrame = {
     val sigCols = (0 until numHashes).map(h => s"mh_$h")
     require(existingSigs.columns.contains(idCol) &&
       sigCols.forall(existingSigs.columns.contains),
@@ -463,8 +460,7 @@ object Dedup {
     val pairs = Lineage.truncate(candidates
       .select(col("id1"), col("id2"),
         (agree.cast("double") / lit(numHashes)).as("est_jaccard"))
-      .filter(col("est_jaccard") >= minEstJaccard),
-      reliableCheckpoints)
+      .filter(col("est_jaccard") >= minEstJaccard))
     newSigs.unpersist(false)
     pairs
   }
@@ -601,8 +597,7 @@ object Dedup {
       .filter(col("count") > maxBucketSize)
 
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucketSize: Int = 200,
-      reliableCheckpoints: Boolean = false): DataFrame = {
+      maxHamming: Int = 3, maxBucketSize: Int = 200): DataFrame = {
     val sig = simhash(df, idCol, textCol).cache()
     val banded0 = simhashBanded(sig, idCol)
     val hot = banded0.groupBy("band", "bucket").count()
@@ -619,8 +614,7 @@ object Dedup {
       .select(col("id1"), col("id2"),
         hamming(col("sig1"), col("sig2")).as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxHamming),
-      reliableCheckpoints)
+      .filter(col("hamming") <= maxHamming))
     sig.unpersist(false)
     pairs
   }

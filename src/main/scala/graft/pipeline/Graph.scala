@@ -59,8 +59,7 @@ object Graph {
     * nodes. No all-pairs work, no driver-side loop over rows; the one
     * driver action besides checkpoints is the node count (a scalar
     * needed as a literal divisor). Lineage is truncated every
-    * `checkpointEvery` rounds (pass `reliableCheckpoints = true` on a
-    * real cluster — see [[Lineage]]).
+    * `checkpointEvery` rounds (see [[Lineage]]).
     *
     * Returns (node, rank) with rank on the `scale` grid.
     */
@@ -69,15 +68,15 @@ object Graph {
       dampNum: Long = 85L, dampDen: Long = 100L,
       scale: Long = 1000000000000L,
       checkpointEvery: Int = 3,
-      reliableCheckpoints: Boolean = false,
       redistributeDangling: Boolean = false): DataFrame = {
     require(iters >= 1, s"pageRank needs >= 1 iteration, got $iters")
     val st = setup(edges, srcCol, dstCol, dampNum, dampDen, scale,
-      reliableCheckpoints, redistributeDangling)
+      redistributeDangling)
     var ranks = st.ranks0
     for (i <- 1 to iters) {
       ranks = st.round(ranks)
-      if (i % checkpointEvery == 0 && i < iters) ranks = st.truncate(ranks)
+      if (i % checkpointEvery == 0 && i < iters)
+        ranks = Lineage.truncate(ranks)
     }
     ranks
   }
@@ -103,16 +102,15 @@ object Graph {
       srcCol: String = "src", dstCol: String = "dst", iters: Int = 5,
       dampNum: Long = 85L, dampDen: Long = 100L,
       scale: Long = 1000000000000L,
-      checkpointEvery: Int = 3,
-      reliableCheckpoints: Boolean = false): DataFrame = {
+      checkpointEvery: Int = 3): DataFrame = {
     require(iters >= 1, s"personalizedPageRank needs >= 1 iteration, got $iters")
     val st = setup(edges, srcCol, dstCol, dampNum, dampDen, scale,
-      reliableCheckpoints, redistributeDangling = false,
-      seeds = Some(seeds))
+      redistributeDangling = false, seeds = Some(seeds))
     var ranks = st.ranks0
     for (i <- 1 to iters) {
       ranks = st.round(ranks)
-      if (i % checkpointEvery == 0 && i < iters) ranks = st.truncate(ranks)
+      if (i % checkpointEvery == 0 && i < iters)
+        ranks = Lineage.truncate(ranks)
     }
     ranks
   }
@@ -149,10 +147,9 @@ object Graph {
       dstCol: String = "dst", tolGrid: Long = 1000000L, maxIters: Int = 100,
       dampNum: Long = 85L, dampDen: Long = 100L,
       scale: Long = 1000000000000L,
-      reliableCheckpoints: Boolean = false,
       onRound: (Int, Long) => Unit = (_, _) => ()): (DataFrame, PrStats) = {
     val (ranks, stats) = pageRankWithStats(edges, srcCol, dstCol, tolGrid,
-      maxIters, dampNum, dampDen, scale, reliableCheckpoints, onRound)
+      maxIters, dampNum, dampDen, scale, onRound)
     if (!stats.converged) throw new IllegalStateException(
       s"pageRankUntilStable did not reach tolGrid=$tolGrid in " +
         s"$maxIters rounds (last max delta ${stats.maxDelta}) — raise " +
@@ -169,13 +166,11 @@ object Graph {
       dstCol: String = "dst", tolGrid: Long = 1000000L, maxIters: Int = 100,
       dampNum: Long = 85L, dampDen: Long = 100L,
       scale: Long = 1000000000000L,
-      reliableCheckpoints: Boolean = false,
       onRound: (Int, Long) => Unit = (_, _) => ()): (DataFrame, PrStats) = {
     require(tolGrid >= 0, s"tolGrid must be >= 0, got $tolGrid")
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    val st = setup(edges, srcCol, dstCol, dampNum, dampDen, scale,
-      reliableCheckpoints)
-    var ranks = st.truncate(st.ranks0)
+    val st = setup(edges, srcCol, dstCol, dampNum, dampDen, scale)
+    var ranks = Lineage.truncate(st.ranks0)
     var round = 0
     var delta = Long.MaxValue
     while (round < maxIters && delta > tolGrid) {
@@ -185,10 +180,9 @@ object Graph {
       // each LogicalRDD carries the constraints/stats of the plan it
       // replaced, so a checkpointed (round ⋈ prev-checkpoint) nests
       // the previous round's captured plan state and optimization
-      // cost grows exponentially — ~2.5×/round from round ~16,
-      // measured in tools/Scratch.scala (variant "full" blows up,
-      // "sep" is flat at constant plan size / RDD depth).
-      val next = st.truncate(st.round(ranks))
+      // cost grows exponentially — ~2.5×/round from round ~16, while
+      // the separate probe keeps plan size and RDD depth constant.
+      val next = Lineage.truncate(st.round(ranks))
       delta = next
         .join(ranks.withColumnRenamed("rank", "__prev"), "node")
         .agg(max(abs(col("rank") - col("__prev")))).head().getLong(0)
@@ -207,11 +201,10 @@ object Graph {
     * transition function.
     */
   private final case class Setup(ranks0: DataFrame,
-      round: DataFrame => DataFrame, truncate: DataFrame => DataFrame)
+      round: DataFrame => DataFrame)
 
   private def setup(edges: DataFrame, srcCol: String, dstCol: String,
       dampNum: Long, dampDen: Long, scale: Long,
-      reliableCheckpoints: Boolean,
       redistributeDangling: Boolean = false,
       seeds: Option[DataFrame] = None): Setup = {
     require(dampNum > 0 && dampNum < dampDen,
@@ -219,17 +212,15 @@ object Graph {
     // scale * dampNum must stay in Long for the per-edge contribution
     require(scale <= Long.MaxValue / dampDen,
       s"scale $scale overflows the contribution product")
-    def truncate(df: DataFrame): DataFrame =
-      Lineage.truncate(df, reliableCheckpoints)
 
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // The |E|-row frame, partitioned on the join key once and pinned:
     // the per-round join against ranks reuses this exchange.
-    val edgesWithDeg = truncate(
+    val edgesWithDeg = Lineage.truncate(
       e.join(outdeg, "src").repartition(col("src")))
-    val nodes = truncate(
+    val nodes = Lineage.truncate(
       edgesWithDeg.select(col("src").as("node"))
         .union(edgesWithDeg.select(col("dst").as("node"))).distinct())
 
@@ -250,7 +241,7 @@ object Graph {
       val nSeeds = seedNodes.count()
       require(nSeeds > 0, "no seed is a node of the graph")
       val tpSeed = (scale * (dampDen - dampNum) / dampDen) / nSeeds
-      truncate(nodes
+      Lineage.truncate(nodes
         .join(seedNodes.withColumn("__s", lit(1L)), Seq("node"), "left")
         .select(col("node"),
           when(col("__s") === 1L, lit(tpSeed)).otherwise(lit(0L)).as("tp"),
@@ -264,7 +255,7 @@ object Graph {
     // shared uniformly — (dampNum·(D DIV n)) DIV dampDen added to
     // every node, D read through a ONE-ROW broadcast cross join so
     // the round stays a single lazy plan (no extra driver action).
-    lazy val dangling = truncate(nodes.join(
+    lazy val dangling = Lineage.truncate(nodes.join(
       edgesWithDeg.select(col("src").as("node")).distinct(),
       Seq("node"), "left_anti"))
 
@@ -314,7 +305,7 @@ object Graph {
       case Some(ntp) => ntp.select(col("node"), col("rank"))
       case None => nodes.select(col("node"), lit(scale / n).as("rank"))
     }
-    Setup(ranks0, round, truncate)
+    Setup(ranks0, round)
   }
 
   /** HITS hubs & authorities (Kleinberg, "Authoritative Sources in a
@@ -340,12 +331,9 @@ object Graph {
     * fan-in at extreme scale) widen the product to DECIMAL(38,0).
     */
   def hits(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", iters: Int = 3,
-      reliableCheckpoints: Boolean = false): DataFrame = {
+      dstCol: String = "dst", iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    def truncate(df: DataFrame): DataFrame =
-      Lineage.truncate(df, reliableCheckpoints)
-    val e = truncate(edges
+    val e = Lineage.truncate(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .distinct()
@@ -356,7 +344,7 @@ object Graph {
         .select(col("node"),
           expr(s"($score * 1000000L) DIV __mx").as(score))
     }
-    var auth = truncate(e.select(col("dst").as("node"))
+    var auth = Lineage.truncate(e.select(col("dst").as("node"))
       .distinct().withColumn("a", lit(1000000L)))
     var hub: DataFrame = null
     (1 to iters).foreach { _ =>
@@ -368,10 +356,10 @@ object Graph {
       // lazily doubled the per-half-step job count and ran 33% slower)
       val hRaw = e.join(auth, e("dst") === auth("node"))
         .groupBy(e("src").as("node")).agg(sum("a").as("h"))
-      hub = truncate(normalized(hRaw, "h"))
+      hub = Lineage.truncate(normalized(hRaw, "h"))
       val aRaw = e.join(hub, e("src") === hub("node"))
         .groupBy(e("dst").as("node")).agg(sum("h").as("a"))
-      auth = truncate(normalized(aRaw, "a"))
+      auth = Lineage.truncate(normalized(aRaw, "a"))
     }
     hub.withColumnRenamed("h", "hub_ppm")
       .join(auth.withColumnRenamed("a", "auth_ppm"), Seq("node"), "full")

@@ -2,20 +2,23 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage truncation shared by the pipeline operators that eagerly
-  * materialize a small intermediate/result frame (near-dup pair sets,
-  * packed-shard assignments, clustering rounds).
+/** The one lineage-truncation policy, shared by every operator that
+  * eagerly materializes an intermediate or result frame (near-dup
+  * pair sets, packed-shard assignments, iterative graph rounds,
+  * RETURNING rows, streamed micro-batches).
   *
-  * `localCheckpoint(true)` is the cheap default for local and
-  * exploratory runs, but it pins the materialized blocks to the
-  * executors that computed them — on a real cluster a lost executor
-  * makes those blocks unrecoverable and kills the job mid-flight.
-  * Operators thread a `reliableCheckpoints` flag down here: pass
-  * `true` on a real cluster to write the blocks to reliable storage
-  * instead (requires `spark.sparkContext.setCheckpointDir` to point
-  * at durable storage, e.g. HDFS/object store).
+  * The choice follows the session: when the SparkContext has a
+  * checkpoint directory (`spark.checkpoint.dir` at startup, or
+  * `sparkContext.setCheckpointDir`), the frame is written there with
+  * `checkpoint()` and survives the loss of the executor that computed
+  * it. Otherwise it is `localCheckpoint(true)`ed: cheap, but the
+  * blocks are pinned to their executors and a lost executor makes
+  * them unrecoverable. On a real cluster, point `spark.checkpoint.dir`
+  * at durable storage (HDFS, object store); no operator takes a flag.
   */
 private[graft] object Lineage {
-  def truncate(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint() else df.localCheckpoint(true)
+  def truncate(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint()
+    else df.localCheckpoint(true)
 }

@@ -410,8 +410,7 @@ object Sampling {
     * corpus size.
     */
   def packSequences(df: DataFrame, idCol: String, tokensCol: String,
-      budget: Long, partitions: Int = 32,
-      reliableCheckpoints: Boolean = false): DataFrame = {
+      budget: Long, partitions: Int = 32): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     // materialize the range partitioning once so both passes see the
@@ -443,9 +442,8 @@ object Sampling {
       }
       .toDF(idCol, tokensCol, "shard_id")
     // truncate lineage off the persisted two-pass frame so it can be
-    // freed now; reliableCheckpoints = true on a real cluster (see
-    // Lineage.truncate — localCheckpoint pins blocks to executors)
-    val cut = Lineage.truncate(out, reliableCheckpoints)
+    // freed now
+    val cut = Lineage.truncate(out)
     parted.unpersist(false)
     cut
   }

@@ -602,7 +602,7 @@ object TextAnalysis {
       vocab: DataFrame)
 
   private[pipeline] def bpeState(df: DataFrame, textCol: String,
-      rounds: Int, reliableCheckpoints: Boolean): BpeState = {
+      rounds: Int): BpeState = {
     require(rounds >= 1 && rounds <= 64,
       s"bpe needs 1 <= rounds <= 64, got $rounds")
     val vocab0 = bpeVocab(df, textCol)
@@ -612,7 +612,7 @@ object TextAnalysis {
     // twice (pair stats AND merge application), the double-reference
     // shape that doubles the lazy plan per round (the pageRank
     // fixpoint lesson, Graph.scala) — truncate lineage every round.
-    var cur = Lineage.truncate(vocab0, reliableCheckpoints)
+    var cur = Lineage.truncate(vocab0)
     var merges = List.empty[DataFrame]
     for (r <- 1 to rounds) {
       val pairs = cur
@@ -627,8 +627,7 @@ object TextAnalysis {
       // over the vocabulary-bounded pair frame; materialized so the
       // 1-row winner is computed once, not once per downstream use.
       val best = Lineage.truncate(
-        pairs.orderBy(col("pair_count").desc, col("pair")).limit(1),
-        reliableCheckpoints)
+        pairs.orderBy(col("pair_count").desc, col("pair")).limit(1))
       merges = merges :+ best.select(lit(r).as("round"),
         split(col("pair"), " ").getItem(0).as("lhs"),
         split(col("pair"), " ").getItem(1).as("rhs"),
@@ -638,8 +637,7 @@ object TextAnalysis {
       cur = Lineage.truncate(
         cur.crossJoin(broadcast(best.select(col("pair").as("__mp"))))
           .withColumn("seq", bpeApplyMerge(col("seq"), col("__mp")))
-          .drop("__mp"),
-        reliableCheckpoints)
+          .drop("__mp"))
     }
     BpeState(merges.reduce(_ unionByName _).orderBy("round"), cur)
   }
@@ -660,9 +658,8 @@ object TextAnalysis {
     * the collected word-count table — [[bpeLearnLocal]] — because
     * after the corpus-linear agg the problem fits one machine.
     */
-  def bpeLearn(df: DataFrame, textCol: String, rounds: Int = 8,
-      reliableCheckpoints: Boolean = false): DataFrame =
-    bpeState(df, textCol, rounds, reliableCheckpoints).merges
+  def bpeLearn(df: DataFrame, textCol: String, rounds: Int = 8): DataFrame =
+    bpeState(df, textCol, rounds).merges
 
   /** Driver-local BPE merge loop over the collected word-count table
     * — the production-shaped trainer: ONE corpus-linear aggregation,
@@ -720,8 +717,8 @@ object TextAnalysis {
     * re-scanned per merge round.
     */
   def bpeEncode(df: DataFrame, srcCol: String, textCol: String,
-      rounds: Int = 8, reliableCheckpoints: Boolean = false): DataFrame = {
-    val st = bpeState(df, textCol, rounds, reliableCheckpoints)
+      rounds: Int = 8): DataFrame = {
+    val st = bpeState(df, textCol, rounds)
     val srcWords = Dedup.spread(df)
       .select(col(srcCol), explode(split(col(textCol), " +")).as("word"))
       .filter(length(col("word")) >= 1)

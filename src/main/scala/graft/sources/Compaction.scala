@@ -39,8 +39,7 @@ object Compaction {
     * is exactly the shape that dies at 100 TB.
     */
   def assignFiles(df: DataFrame, sortCols: Seq[String],
-      targetRows: Long, partitions: Int = 32,
-      reliableCheckpoints: Boolean = false): DataFrame = {
+      targetRows: Long, partitions: Int = 32): DataFrame = {
     require(targetRows > 0 && partitions > 0 && sortCols.nonEmpty,
       s"need targetRows > 0, partitions > 0, non-empty sortCols; " +
         s"got $targetRows, $partitions, $sortCols")
@@ -72,8 +71,8 @@ object Compaction {
       }
     val out = spark.createDataFrame(ranked, schema)
     // truncate lineage off the persisted two-pass frame so it can be
-    // freed now; reliableCheckpoints = true on a real cluster
-    val cut = Lineage.truncate(out, reliableCheckpoints)
+    // freed now
+    val cut = Lineage.truncate(out)
     parted.unpersist(false)
     cut
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
+import graft.pipeline.Lineage
 
 /** Structured Streaming operators over the `events` table shape
   * (event_id, ts, user_id, event_type, value, props).
@@ -445,7 +446,7 @@ object EventStreams {
           org.apache.spark.sql.Row], _: Long) =>
         val existing = catalog.load(table)
         catalog.overwrite(table,
-          existing.unionByName(batch.localCheckpoint(true), true))
+          existing.unionByName(Lineage.truncate(batch), true))
       }
       .start()
 
@@ -504,7 +505,7 @@ object EventStreams {
           org.apache.spark.sql.Row], _: Long) =>
         val existing = catalog.load(table)
         catalog.overwrite(table, upsertLatest(
-          existing.unionByName(batch.localCheckpoint(true), true),
+          existing.unionByName(Lineage.truncate(batch), true),
           keyCols, versionCol))
       }
       .start()

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+import java.util.Comparator
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -8,6 +10,33 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` under both lineage policies of [[graft.pipeline.Lineage]]:
+    * first with no checkpoint dir (localCheckpoint), then with a fresh
+    * temp dir set (reliable checkpoint). Asserts that only the second
+    * run wrote files under the dir, then restores the session's
+    * previous dir — in local mode `setCheckpointDir(null)` clears it,
+    * so the reliable path never leaks into later suites. Returns the
+    * (local, reliable) results; `body` must force its frames.
+    */
+  def underBothLineagePolicies[A](body: => A): (A, A) = {
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    val dir = Files.createTempDirectory("graft_ckpt")
+    def written(): Long = Files.walk(dir).filter(Files.isRegularFile(_)).count()
+    try {
+      sc.setCheckpointDir(null)
+      val local = body
+      assert(written() == 0, s"localCheckpoint run wrote under $dir")
+      sc.setCheckpointDir(dir.toString)
+      val reliable = body
+      assert(written() > 0, s"no reliable checkpoint written under $dir")
+      (local, reliable)
+    } finally {
+      sc.setCheckpointDir(prev.orNull)
+      Files.walk(dir).sorted(Comparator.reverseOrder()).forEach(Files.delete(_))
+    }
+  }
 }
 
 object SparkTestBase {

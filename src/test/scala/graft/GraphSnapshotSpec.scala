@@ -150,8 +150,8 @@ class GraphSnapshotSpec extends SparkTestBase {
     // Regression pin for the exponential plan blowup: checkpointing
     // the (round ⋈ prev) delta frame nested each round's captured
     // plan state inside the next LogicalRDD, and per-round cost grew
-    // ~2.5×/round from round ~16 (tools/Scratch.scala bisect) — a
-    // ~40-round run like this one would effectively hang. With the
+    // ~2.5×/round from round ~16 — a ~40-round run like this one
+    // would effectively hang. With the
     // delta probe outside the truncated frame, rounds are flat and
     // this finishes in seconds; deltas decay by dampNum/dampDen per
     // round, which also pins the documented decay model.

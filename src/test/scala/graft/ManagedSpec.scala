@@ -35,32 +35,39 @@ class ManagedSpec extends SparkTestBase {
   }
 
   test("todo-app CRUD transcript: insert/update/delete with RETURNING") {
-    val (catalog, managed, runner) = freshManaged()
-    runner.apply(migrations)
+    // RETURNING rows are lineage-truncated before the swap; the
+    // transcript must read the same under both session policies
+    val (local, reliable) = underBothLineagePolicies {
+      val (catalog, managed, runner) = freshManaged()
+      runner.apply(migrations)
 
-    // autoincrement ids assigned 1, 2
-    val ins = managed.exec(
-      "insert into todos(text, created, completed) values ('buy milk', 1.0, false), ('walk dog', 2.0, false) returning id, text")
-    assert(ins.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
-      Set((1L, "buy milk"), (2L, "walk dog")))
+      // autoincrement ids assigned 1, 2
+      val ins = managed.exec(
+        "insert into todos(text, created, completed) values ('buy milk', 1.0, false), ('walk dog', 2.0, false) returning id, text")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(ins == Set((1L, "buy milk"), (2L, "walk dog")))
 
-    // INSERT ... SET sugar
-    managed.exec("insert into todos set text = 'pay bills', created = 3.0, completed = false")
-    assert(managed.exec("select count(1) as n from todos group by ()")
-      .collect()(0).getLong(0) == 3)
+      // INSERT ... SET sugar
+      managed.exec("insert into todos set text = 'pay bills', created = 3.0, completed = false")
+      assert(managed.exec("select count(1) as n from todos group by ()")
+        .collect()(0).getLong(0) == 3)
 
-    // UPDATE with WHERE + RETURNING post-update values
-    val upd = managed.exec(
-      "update todos set completed = true where text = 'buy milk' returning id, completed")
-    val updRows = upd.collect()
-    assert(updRows.length == 1 && updRows(0).getBoolean(1))
+      // UPDATE with WHERE + RETURNING post-update values
+      val updRows = managed.exec(
+        "update todos set completed = true where text = 'buy milk' returning id, completed")
+        .collect().toSeq
+      assert(updRows.length == 1 && updRows(0).getBoolean(1))
 
-    // DELETE with RETURNING
-    val del = managed.exec(
-      "delete from todos where completed = true returning id")
-    assert(del.collect().map(_.getLong(0)).toSeq == Seq(1L))
-    assert(managed.exec("select count(1) as n from todos group by ()")
-      .collect()(0).getLong(0) == 2)
+      // DELETE with RETURNING
+      val del = managed.exec(
+        "delete from todos where completed = true returning id")
+        .collect().map(_.getLong(0)).toSeq
+      assert(del == Seq(1L))
+      assert(managed.exec("select count(1) as n from todos group by ()")
+        .collect()(0).getLong(0) == 2)
+      (ins, updRows, del, catalog.load("todos").orderBy("id").collect().toSeq)
+    }
+    assert(reliable == local)
   }
 
   test("ON CONFLICT IGNORE and REPLACE by primary key") {

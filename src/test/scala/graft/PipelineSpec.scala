@@ -525,39 +525,24 @@ class PipelineSpec extends SparkTestBase {
   test("connected components: reliable-checkpoint path matches default") {
     import spark.implicits._
     import graft.pipeline.Cluster
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
-    val prev = spark.sparkContext.getCheckpointDir
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    try {
-      // long enough chain that the periodic truncate actually fires
-      // (checkpointEvery = 2 over several rounds) plus an island
-      val pairs = ((1L to 40L).sliding(2).map(w => (w.head, w.last)).toSeq
-        :+ (100L, 101L)).toDF("id1", "id2")
+    // long enough chain that the periodic truncate actually fires
+    // (checkpointEvery = 2 over several rounds) plus an island
+    val pairs = ((1L to 40L).sliding(2).map(w => (w.head, w.last)).toSeq
+      :+ (100L, 101L)).toDF("id1", "id2")
+    val (local, reliable) = underBothLineagePolicies {
       val (labels, stats) = Cluster.connectedComponentsWithStats(pairs,
-        checkpointEvery = 2, reliableCheckpoints = true)
-      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val want = Cluster.connectedComponents(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        checkpointEvery = 2)
       assert(stats.converged)
-      assert(got == want)
-      assert(got.filter(_._1 <= 40L).values.toSet == Set(1L))
-      assert(got(100L) == 100L && got(101L) == 100L)
-      // the RELIABLE path must have gone through the checkpoint dir
-      // (localCheckpoint would leave it empty and pin blocks to
-      // executors instead — lost on executor failure)
-      val ckptFiles = java.nio.file.Files.walk(dir).count()
-      assert(ckptFiles > 1, s"no reliable checkpoint written under $dir")
-      // and the returned frame's lineage is cut: its plan bottoms out
-      // in the checkpointed RDD, not the iterative join tree
+      // the returned frame's lineage is cut: its plan bottoms out in
+      // the checkpointed RDD, not the iterative join tree
       val leaves = labels.queryExecution.optimizedPlan.collectLeaves()
       assert(leaves.forall(_.getClass.getSimpleName == "LogicalRDD"),
         leaves.map(_.getClass.getSimpleName).mkString(","))
-    } finally {
-      prev match {
-        case Some(p) => spark.sparkContext.setCheckpointDir(p)
-        case None    => () // no API to unset; harmless for other tests
-      }
+      labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
+    assert(reliable == local)
+    assert(local.filter(_._1 <= 40L).values.toSet == Set(1L))
+    assert(local(100L) == 100L && local(101L) == 100L)
   }
 
   test("stratified sample is deterministic and tracks the rates") {
@@ -913,37 +898,25 @@ class PipelineSpec extends SparkTestBase {
 
   test("near-dup miners and packing: reliable-checkpoint path matches default") {
     import graft.pipeline.{Sampling, TextAnalysis}
-    val dir = java.nio.file.Files.createTempDirectory("graft_nd_ckpt")
-    val prev = spark.sparkContext.getCheckpointDir
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    try {
-      val corpus = docs.filter(col("doc_id") < 60)
-      val planted = corpus.filter(col("doc_id") < 15).select(
-        (col("doc_id") + 1000000).as("doc_id"),
-        expr("substring(text, instr(text, ' ') + 1)").as("text"))
-      val in = corpus.unionByName(planted)
-      def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(pairSet(Dedup.minhashNearDupPairs(in, "doc_id", "text",
-          reliableCheckpoints = true)) ==
-        pairSet(Dedup.minhashNearDupPairs(in, "doc_id", "text")))
-      assert(pairSet(Dedup.simhashNearDupPairs(in, "doc_id", "text",
-          reliableCheckpoints = true)) ==
-        pairSet(Dedup.simhashNearDupPairs(in, "doc_id", "text")))
-      val toks = TextAnalysis.tokenCounts(corpus, "doc_id", "text")
-        .select(col("doc_id"), col("ws_tokens").as("n_tokens"))
-      def packed(reliable: Boolean): Seq[(Long, Long, Long)] =
+    val corpus = docs.filter(col("doc_id") < 60)
+    val planted = corpus.filter(col("doc_id") < 15).select(
+      (col("doc_id") + 1000000).as("doc_id"),
+      expr("substring(text, instr(text, ' ') + 1)").as("text"))
+    val in = corpus.unionByName(planted)
+    def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val toks = TextAnalysis.tokenCounts(corpus, "doc_id", "text")
+      .select(col("doc_id"), col("ws_tokens").as("n_tokens"))
+    val (local, reliable) = underBothLineagePolicies {
+      (pairSet(Dedup.minhashNearDupPairs(in, "doc_id", "text")),
+        pairSet(Dedup.simhashNearDupPairs(in, "doc_id", "text")),
         Sampling.packSequences(toks, "doc_id", "n_tokens", budget = 256,
-          partitions = 5, reliableCheckpoints = reliable)
+          partitions = 5)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-          .sortBy(_._1).toSeq
-      assert(packed(true) == packed(false))
-    } finally {
-      prev match {
-        case Some(p) => spark.sparkContext.setCheckpointDir(p)
-        case None    => ()
-      }
+          .sortBy(_._1).toSeq)
     }
+    assert(local._1.nonEmpty && local._3.nonEmpty)
+    assert(reliable == local)
   }
 
   test("spread repartitions bare scans but leaves shuffled frames untouched") {
