@@ -4,10 +4,11 @@ import org.apache.spark.sql.functions.{col, expr, to_json, xxhash64}
 
 /** Per-query timings: one cold run, then `median`/`min`/`max` over
   * the warm iterations (sorted); `retries` counts contention retry
-  * passes (see the retry note in `main`).
+  * passes (see the retry note in `main`). `firstMedian` is the median
+  * of the first warm pass alone, before any retry re-sampled it.
   */
 case class BenchTimes(cold: Double, median: Double, min: Double,
-    max: Double, retries: Int = 0)
+    max: Double, firstMedian: Double, retries: Int = 0)
 
 object Bench {
 
@@ -16,6 +17,21 @@ object Bench {
     */
   private[graft] def refDriftJson(drift: Option[Double]): String =
     drift.map("%.3f".formatLocal(java.util.Locale.ROOT, _)).getOrElse("null")
+
+  /** Contention indicator: the median ratio of each entry's
+    * first-warm-pass median to its reference median; None without any
+    * referenced entry. The first pass is the one sample the contention
+    * retry has not touched. That retry re-samples exactly the entries
+    * that read above 2x their reference, so post-retry medians would
+    * pull the ratio back towards 1 just when the host is contended.
+    */
+  private[graft] def refDrift(times: Map[String, BenchTimes],
+      ref: Map[String, Double]): Option[Double] = {
+    val ratios = times.toSeq.flatMap { case (k, v) =>
+      ref.get(k).filter(_ > 0).map(v.firstMedian / _)
+    }.sorted
+    if (ratios.isEmpty) None else Some(ratios(ratios.length / 2))
+  }
 
   /** Force full evaluation of EVERY output column. A bare `count()`
     * lets Catalyst prune the final projection, so entries whose cost
@@ -130,6 +146,7 @@ object Bench {
       // per-entry retry count is reported so a persistently noisy
       // entry is visible rather than silently smoothed.
       var warms = warmPass()
+      val firstMedian = med(warms)
       var retries = 0
       def contended(ws: Seq[Double]): Boolean =
         med(ws) > 2.0 * ws.min ||
@@ -139,7 +156,8 @@ object Bench {
         warms = warms ++ warmPass()
       }
       val sorted = warms.sorted
-      name -> BenchTimes(cold, med(warms), sorted.head, sorted.last, retries)
+      name -> BenchTimes(cold, med(warms), sorted.head, sorted.last,
+        firstMedian, retries)
     }
     val results = bench(SparkEntry.queries)
     // gate-entry error count, snapshotted BEFORE the extras run: the
@@ -197,21 +215,16 @@ object Bench {
     val slowest = (results -- headline.keys).toSeq
       .sortBy(-_._2.median).take(5).toMap
     // Contention indicator (r12 verdict item 2): median ratio of the
-    // q1..q10 reference medians vs bench_ref.json (prior-round driver
-    // medians). These ten relational entries have been untouched since
+    // q1..q10 first-warm-pass medians vs bench_ref.json (prior-round
+    // driver medians). These ten relational entries have been untouched since
     // round 1, so ref_drift ~1 means a comparable host window and
     // ref_drift >> 1 (r12's contended c32 run would have read ~2)
     // flags a bad window — letting the driver/judge tell a 2x host
     // stall from a 2x regression without re-running. null when no
     // reference file/entries are available.
-    val refDrift: Option[Double] = {
-      val ratios = headline.toSeq.flatMap { case (k, v) =>
-        refMedians.get(k).filter(_ > 0).map(v.median / _)
-      }.sorted
-      if (ratios.isEmpty) None else Some(ratios(ratios.length / 2))
-    }
+    val drift = refDrift(headline, refMedians)
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":$gateErrors,"n_extra_errors":${errors.size - gateErrors},"warm_iters":$warmIters,"ref_drift":${refDriftJson(refDrift)},"queries":${objOf(headline)(_.median)},"slowest":${objOf(slowest)(_.median)},"detail":"bench_out.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":$gateErrors,"n_extra_errors":${errors.size - gateErrors},"warm_iters":$warmIters,"ref_drift":${refDriftJson(drift)},"queries":${objOf(headline)(_.median)},"slowest":${objOf(slowest)(_.median)},"detail":"bench_out.json","sf":"$sfDir"}"""
     println(compact)
     if (errors.nonEmpty) System.err.println(
       s"BENCH: ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")

@@ -112,7 +112,7 @@ object Communities {
     * monotonically. The round function reads the live frame twice
     * (degree + filter), so lineage is truncated every
     * `checkpointEvery` rounds to contain the plan doubling (the
-    * gr2/bpe double-reference family; bounded at 2^checkpointEvery×
+    * gr2 double-reference family; bounded at 2^checkpointEvery×
     * between cuts). Convergence within the budget is the caller's
     * contract — pass `rounds` >= the graph's peel depth and assert
     * idempotence in tests (the spec does; real deployments log the

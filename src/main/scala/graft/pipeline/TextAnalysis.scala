@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Text analysis operators: quality scoring, token counting, language
   * identification, document fingerprinting. All built-in expressions
@@ -559,39 +560,38 @@ object TextAnalysis {
 
   /** The word-frequency table BPE training operates on: one
     * corpus-linear partial aggregation (map-side combine collapses
-    * repeated tokens before the shuffle); everything downstream of
-    * this frame is vocabulary-bounded.
+    * repeated tokens before the shuffle). [[bpeState]] collects it
+    * once; everything after that is vocabulary-bounded. It reads the
+    * scan's own partitions: a [[Dedup.spread]] repartition would put
+    * the raw text through one more shuffle (one more eager job) only
+    * to feed an aggregation that shrinks it to the vocabulary.
     */
   private def bpeVocab(df: DataFrame, textCol: String): DataFrame =
-    Dedup.spread(df)
-      .select(explode(split(col(textCol), " +")).as("word"))
+    df.select(explode(split(col(textCol), " +")).as("word"))
       .filter(length(col("word")) >= 1)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
 
   /** Initial BPE symbol sequence of a word: space-joined characters
     * plus the Sennrich end-of-word marker ("low" → "l o w </w>").
-    * The marker string never collides with a single character, and
-    * merged symbols are concatenations of space-free symbols, so a
-    * symbol never contains a space — token boundaries in the
-    * space-joined representation are unambiguous.
+    * Built with the java.util.regex replace that Spark's
+    * `regexp_replace(word, "(.)", "$1 ")` runs, so `.` takes a
+    * surrogate pair whole (an emoji is one symbol) and skips `\n`
+    * ("a\nb" → "a \nb </w>"). The marker never collides with a single
+    * character, and merged symbols are concatenations of space-free
+    * symbols, so token boundaries in the space-joined form are
+    * unambiguous.
     */
-  private def bpeSeq0(word: Column): Column =
-    concat(regexp_replace(word, "(.)", "$1 "), lit("</w>"))
+  private def bpeSeq0(word: String): String =
+    word.replaceAll("(.)", "$1 ") + "</w>"
 
-  /** One BPE merge applied to a space-joined symbol sequence:
-    * boundary-space-guarded literal replace (" l r " → " lr "),
-    * left-to-right non-overlapping — the scan resumes after each
-    * replacement, so in a same-pair run ("a a a a") the shared
-    * boundary space is consumed and alternate occurrences merge
-    * (" aa a a "), exactly the semantics DuckDB's `replace` and
-    * Spark's `replace` share (pinned by BpeSpec's planted-run case).
+  /** Spark's (and DuckDB's) string order: unsigned UTF-8 bytes, which
+    * is code-point order. `String.compareTo` orders UTF-16 code units
+    * and so puts an astral-plane symbol before U+E000..U+FFFF.
     */
-  private def bpeApplyMerge(seq: Column, pair: Column): Column =
-    trim(call_function("replace",
-      concat(lit(" "), seq, lit(" ")),
-      concat(lit(" "), pair, lit(" ")),
-      concat(lit(" "), call_function("replace", pair, lit(" "), lit("")),
-        lit(" "))))
+  private def codePointCompare(a: String, b: String): Int =
+    java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Learned merges plus the final per-word symbol sequences —
     * shared by [[bpeLearn]] (which returns the merge table) and
@@ -601,106 +601,92 @@ object TextAnalysis {
   private[pipeline] case class BpeState(merges: DataFrame,
       vocab: DataFrame)
 
+  /** The BPE trainer: the word-count table ([[bpeVocab]], the only
+    * corpus-linear work) is collected once, then every round runs in
+    * driver memory, as in Sennrich's reference trainer. A round counts
+    * adjacent symbol pairs weighted by word frequency, takes the
+    * (count DESC, pair ASC) winner and applies it to every sequence
+    * left to right without overlap: the boundary-guarded replace
+    * resumes after each match, so in a run ("a a a a") the shared
+    * boundary space is consumed and alternate occurrences merge
+    * (" aa a a "), the semantics Spark's and DuckDB's `replace` share.
+    * Once no pair is left the sequences stay as they are and no
+    * further merge rows are emitted.
+    *
+    * Returns two local frames: the merge table (round, lhs, rhs,
+    * merged, pair_count) and the final (word, seq) vocabulary. Driver
+    * memory grows with the number of distinct words, not the corpus.
+    */
   private[pipeline] def bpeState(df: DataFrame, textCol: String,
       rounds: Int): BpeState = {
     require(rounds >= 1 && rounds <= 64,
       s"bpe needs 1 <= rounds <= 64, got $rounds")
-    val vocab0 = bpeVocab(df, textCol)
-      .withColumn("seq", bpeSeq0(col("word")))
-    // The merge loop is vocabulary-bounded: `cur` is one row per
-    // DISTINCT word however large the corpus. Each round reads `cur`
-    // twice (pair stats AND merge application), the double-reference
-    // shape that doubles the lazy plan per round (the pageRank
-    // fixpoint lesson, Graph.scala) — truncate lineage every round.
-    var cur = Lineage.truncate(vocab0)
-    var merges = List.empty[DataFrame]
-    for (r <- 1 to rounds) {
-      val pairs = cur
-        .select(col("freq"), split(col("seq"), " ").as("sy"))
-        .filter(size(col("sy")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(sy) - 1), " +
-            "i -> concat(element_at(sy, i), ' ', element_at(sy, i + 1)))"
-        )).as("pair"))
-        .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
-      // Deterministic argmax (count DESC, pair ASC) as a TakeOrdered
-      // over the vocabulary-bounded pair frame; materialized so the
-      // 1-row winner is computed once, not once per downstream use.
-      val best = Lineage.truncate(
-        pairs.orderBy(col("pair_count").desc, col("pair")).limit(1))
-      merges = merges :+ best.select(lit(r).as("round"),
-        split(col("pair"), " ").getItem(0).as("lhs"),
-        split(col("pair"), " ").getItem(1).as("rhs"),
-        call_function("replace", col("pair"), lit(" "), lit(""))
-          .as("merged"),
-        col("pair_count"))
-      cur = Lineage.truncate(
-        cur.crossJoin(broadcast(best.select(col("pair").as("__mp"))))
-          .withColumn("seq", bpeApplyMerge(col("seq"), col("__mp")))
-          .drop("__mp"))
+    val vocab = bpeVocab(df, textCol).collect()
+    val words = vocab.map(_.getString(0))
+    val freqs = vocab.map(_.getLong(1))
+    val seqs = words.map(bpeSeq0)
+    val merges = Vector.newBuilder[Row]
+    var round = 1
+    var exhausted = false
+    while (round <= rounds && !exhausted) {
+      val counts = scala.collection.mutable.HashMap.empty[String, Long]
+      for (i <- seqs.indices) {
+        val sy = seqs(i).split(" ", -1)
+        for (j <- 0 until sy.length - 1) {
+          val p = sy(j) + " " + sy(j + 1)
+          // Spark's ANSI sum raises on overflow; so does this one
+          counts(p) = Math.addExact(counts.getOrElse(p, 0L), freqs(i))
+        }
+      }
+      if (counts.isEmpty) exhausted = true
+      else {
+        val (pair, n) = counts.reduce { (a, b) =>
+          if (a._2 != b._2) { if (a._2 > b._2) a else b }
+          else if (codePointCompare(a._1, b._1) <= 0) a else b
+        }
+        val Array(lhs, rhs) = pair.split(" ", -1)
+        merges += Row(round, lhs, rhs, lhs + rhs, n)
+        val (from, to) = (s" $pair ", s" $lhs$rhs ")
+        // the padded sequence keeps exactly one space at each end, so
+        // dropping them is Spark's space-only `trim` (String.trim
+        // would also eat a leading "\n" symbol)
+        for (i <- seqs.indices) {
+          val s = s" ${seqs(i)} ".replace(from, to)
+          seqs(i) = s.substring(1, s.length - 1)
+        }
+        round += 1
+      }
     }
-    BpeState(merges.reduce(_ unionByName _).orderBy("round"), cur)
+    val spark = df.sparkSession
+    import scala.jdk.CollectionConverters._
+    BpeState(
+      spark.createDataFrame(merges.result().asJava, StructType(Seq(
+        StructField("round", IntegerType, nullable = false),
+        StructField("lhs", StringType),
+        StructField("rhs", StringType),
+        StructField("merged", StringType),
+        StructField("pair_count", LongType)))),
+      spark.createDataFrame(
+        words.indices.map(i => Row(words(i), seqs(i))).asJava,
+        StructType(Seq(StructField("word", StringType),
+          StructField("seq", StringType)))))
   }
 
   /** Iterative BPE merge learning (Sennrich, Haddow & Birch, ACL
     * 2016): `rounds` merge rules learned by repeatedly taking the
     * corpus-weighted most frequent adjacent symbol pair (ties on the
-    * pair string) and fusing it across the vocabulary. Returns one
-    * row per round: (round, lhs, rhs, merged, pair_count).
+    * pair string in code-point order) and fusing it across the
+    * vocabulary. Returns one row per round, (round, lhs, rhs, merged,
+    * pair_count); fewer than `rounds` rows when the vocabulary runs out
+    * of pairs.
     *
-    * Scale shape: the corpus is touched ONCE (the word-frequency
-    * partial agg); every merge round runs over the distinct-word
-    * frame — vocabulary-bounded work per round regardless of corpus
-    * token volume, with lineage truncated per round so the plan stays
-    * flat. This distributed loop is the engine-replayable form (the
-    * oracle replays every round in SQL); production trainers learning
-    * tens of thousands of merges run the same loop driver-local on
-    * the collected word-count table — [[bpeLearnLocal]] — because
-    * after the corpus-linear agg the problem fits one machine.
+    * Scale shape: the corpus is touched once (the word-frequency
+    * partial agg, collected to the driver); the merge loop is one
+    * driver-side loop over the distinct words ([[bpeState]]), so
+    * driver memory grows with the vocabulary, not with corpus tokens.
     */
   def bpeLearn(df: DataFrame, textCol: String, rounds: Int = 8): DataFrame =
     bpeState(df, textCol, rounds).merges
-
-  /** Driver-local BPE merge loop over the collected word-count table
-    * — the production-shaped trainer: ONE corpus-linear aggregation,
-    * then the entire merge iteration on a single machine (the word
-    * table is vocabulary-bounded; Sennrich's reference trainer is
-    * exactly this loop). Semantics identical to [[bpeLearn]]
-    * (same pair counting, same (count DESC, pair ASC) tie-break,
-    * same boundary-consuming left-to-right merge application) —
-    * BpeSpec pins the two learners merge-for-merge.
-    */
-  def bpeLearnLocal(df: DataFrame, textCol: String,
-      rounds: Int): Seq[(Int, String, String, String, Long)] = {
-    require(rounds >= 1, s"bpeLearnLocal needs rounds >= 1, got $rounds")
-    val words = bpeVocab(df, textCol)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    var seqs: Array[(String, Long)] =
-      words.map { case (w, f) => (w.map(c => s"$c ").mkString + "</w>", f) }
-    val out = Vector.newBuilder[(Int, String, String, String, Long)]
-    for (r <- 1 to rounds) {
-      val counts = scala.collection.mutable.Map.empty[String, Long]
-      seqs.foreach { case (seq, f) =>
-        val sy = seq.split(" ")
-        var i = 0
-        while (i < sy.length - 1) {
-          val p = sy(i) + " " + sy(i + 1)
-          counts(p) = counts.getOrElse(p, 0L) + f
-          i += 1
-        }
-      }
-      if (counts.nonEmpty) {
-        val (pair, cnt) = counts.minBy { case (p, c) => (-c, p) }
-        val Array(l, rr) = pair.split(" ")
-        out += ((r, l, rr, l + rr, cnt))
-        seqs = seqs.map { case (seq, f) =>
-          ((" " + seq + " ").replace(" " + pair + " ",
-            " " + l + rr + " ").trim, f)
-        }
-      }
-    }
-    out.result()
-  }
 
   /** BPE corpus tokenization stats with merges learned in the same
     * pass: per `srcCol` the word count, the token count under the
@@ -709,12 +695,12 @@ object TextAnalysis {
     * number a pipeline tracks per ingest source — a source whose
     * fertility spikes is one the tokenizer serves badly).
     *
-    * Scale shape: TWO corpus-linear partial aggs (global word freqs
-    * for training, (source, word) occurrence counts for scoring) —
-    * both collapse map-side; tokenization itself happens once per
-    * DISTINCT word on the vocabulary-bounded frame and joins back to
-    * the (source, word) counts, so no document text is ever
-    * re-scanned per merge round.
+    * Scale shape: the corpus is read twice. Training collects the
+    * global word counts to the driver and runs the merge loop there
+    * ([[bpeState]]; driver memory grows with the number of distinct
+    * words). Scoring is one (source, word) partial agg that joins the
+    * final per-word token counts back, so each distinct word is
+    * tokenized once and no document text is re-scanned per round.
     */
   def bpeEncode(df: DataFrame, srcCol: String, textCol: String,
       rounds: Int = 8): DataFrame = {

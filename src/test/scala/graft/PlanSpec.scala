@@ -745,16 +745,53 @@ class PlanSpec extends SparkTestBase {
     assert(p.contains("Union"), p.take(2000))
   }
 
-  test("bpe merge rounds keep the plan flat via per-round truncation") {
-    // without per-round lineage truncation the pair-stats + merge
-    // double reference doubles the lazy plan per round (the pageRank
-    // fixpoint failure family); with it, the final plan reads the
-    // checkpointed vocab, not a 2^rounds tree
+  test("bpe merges are a local frame: a flat plan that never re-scans the corpus") {
+    // the merge loop runs on the driver over the collected word
+    // counts, so the merge table is a local relation: its plan has the
+    // same size for any number of rounds and reads no parquet
     val merges = graft.pipeline.TextAnalysis.bpeLearn(
       Tables.load(spark, sf, "documents"), "text", rounds = 6)
     val p = plan(merges)
     assert(p.linesIterator.length < 200, s"plan blew up: ${p.take(2000)}")
     assert(!p.contains("FileScan parquet"),
-      "final merge frame must read truncated lineage, not re-scan the corpus")
+      "final merge frame must be local, not re-scan the corpus")
+  }
+
+  test("building bp2_bpe_learn runs at most 3 Spark jobs") {
+    // the parquet schema read plus the vocabulary aggregation's stages
+    // under AQE; the merge rounds themselves launch no job. Jobs are
+    // counted by job group, and a marker job run last in the group
+    // proves the (asynchronous) listener bus has delivered them all.
+    val sc = spark.sparkContext
+    val group = "bp2-construct-jobs"
+    @volatile var jobs = 0
+    @volatile var markerSeen = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (props.exists(_.getProperty("graft.test.marker") != null))
+            markerSeen = true
+          else jobs += 1
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "bp2 construction")
+      SparkEntry.queries("bp2_bpe_learn")(spark, sf)
+      sc.setLocalProperty("graft.test.marker", "1")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis + 10000
+      while (!markerSeen && System.currentTimeMillis < deadline)
+        Thread.sleep(20)
+      assert(markerSeen, "marker job never reached the listener")
+      assert(jobs >= 1 && jobs <= 3, s"bp2 construction ran $jobs jobs")
+    } finally {
+      sc.setLocalProperty("graft.test.marker", null)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

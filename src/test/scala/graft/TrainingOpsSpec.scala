@@ -1,15 +1,18 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import graft.pipeline.TextAnalysis
 
 /** Behavior specs for the tokenizer-training operators (BPE learn /
   * encode). Cross-engine value equality is the gate's job
   * (bp2/bp3 oracle entries); these pin the algorithmic semantics:
-  * the distributed and driver-local learners agree merge-for-merge,
-  * the classic Sennrich example learns the textbook merges, and the
-  * boundary-consuming left-to-right merge application is exactly the
-  * documented (and oracle-replayed) semantics.
+  * the driver-side learner agrees merge-for-merge with a reference
+  * written in Spark expressions, the classic Sennrich example learns
+  * the textbook merges, and the boundary-consuming left-to-right merge
+  * application is exactly the documented (and oracle-replayed)
+  * semantics.
   */
 class TrainingOpsSpec extends SparkTestBase {
 
@@ -18,6 +21,76 @@ class TrainingOpsSpec extends SparkTestBase {
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
   }
+
+  private type Merge = (Int, String, String, String, Long)
+
+  /** Reference BPE learner in Spark expressions, one round at a time:
+    * the initial sequence by `regexp_replace`, weighted pair counts by
+    * aggregation, the (count DESC, pair ASC) winner by Spark's sort,
+    * and the merge as a boundary-guarded `replace` plus `trim`. Stops
+    * when no pair is left. Returns the merges and the final
+    * (word, seq) vocabulary.
+    */
+  private def referenceBpe(df: DataFrame, textCol: String,
+      rounds: Int): (Seq[Merge], DataFrame) = {
+    var cur = df.select(explode(split(col(textCol), " +")).as("word"))
+      .filter(length(col("word")) >= 1)
+      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
+      .withColumn("seq",
+        concat(regexp_replace(col("word"), "(.)", "$1 "), lit("</w>")))
+      .localCheckpoint()
+    val merges = Seq.newBuilder[Merge]
+    var r = 1
+    var done = false
+    while (r <= rounds && !done) {
+      val best = cur
+        .select(col("freq"), split(col("seq"), " ").as("sy"))
+        .filter(size(col("sy")) >= 2)
+        .select(col("freq"), explode(expr(
+          "transform(sequence(1, size(sy) - 1), " +
+            "i -> concat(element_at(sy, i), ' ', element_at(sy, i + 1)))"
+        )).as("pair"))
+        .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
+        .orderBy(col("pair_count").desc, col("pair")).limit(1)
+        .collect().headOption
+      best match {
+        case None => done = true
+        case Some(b) =>
+          val pair = b.getString(0)
+          val Array(lhs, rhs) = pair.split(" ", -1)
+          merges += ((r, lhs, rhs, lhs + rhs, b.getLong(1)))
+          cur = cur.withColumn("seq", trim(call_function("replace",
+            concat(lit(" "), col("seq"), lit(" ")),
+            lit(s" $pair "), lit(s" $lhs$rhs ")))).localCheckpoint()
+          r += 1
+      }
+    }
+    (merges.result(), cur.select("word", "seq"))
+  }
+
+  /** (source, n_words, n_tokens) of a corpus tokenized by `vocab`. */
+  private def referenceEncode(df: DataFrame, srcCol: String,
+      textCol: String, vocab: DataFrame): Seq[(String, Long, Long)] =
+    df.select(col(srcCol), explode(split(col(textCol), " +")).as("word"))
+      .filter(length(col("word")) >= 1)
+      .join(vocab.select(col("word"),
+        size(split(col("seq"), " ")).cast("long").as("n_toks")), "word")
+      .groupBy(col(srcCol))
+      .agg(count(lit(1)).as("n_words"), sum(col("n_toks")).as("n_tokens"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .toSeq.sorted
+
+  private def learned(df: DataFrame, textCol: String,
+      rounds: Int): Seq[Merge] =
+    TextAnalysis.bpeLearn(df, textCol, rounds)
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getLong(4))).toSeq
+
+  private def encoded(df: DataFrame, srcCol: String, textCol: String,
+      rounds: Int): Seq[(String, Long, Long)] =
+    TextAnalysis.bpeEncode(df, srcCol, textCol, rounds)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .toSeq
 
   test("bpeLearn reproduces the textbook low/lower merges") {
     val df = docsOf("low low low lower")
@@ -30,13 +103,51 @@ class TrainingOpsSpec extends SparkTestBase {
       (3, "low", "</w>", "low</w>", 3L)))
   }
 
-  test("distributed and driver-local learners agree merge-for-merge") {
-    val df = Tables.load(spark, sf, "documents")
-    val dist = TextAnalysis.bpeLearn(df, "text", rounds = 8)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getLong(4))).toSeq
-    val local = TextAnalysis.bpeLearnLocal(df, "text", rounds = 8)
-    assert(dist === local)
+  test("bpeLearn and bpeEncode match the Spark-expression reference") {
+    // the adversarial corpora are where a driver loop written with
+    // JVM string rules drifts from Spark's: `.` skips "\n" (and a
+    // padded "\na" symbol must survive the space-only trim), `.`
+    // takes a surrogate pair whole, and ties break in code-point
+    // order, where U+FF41 sorts before an emoji (UTF-16 puts it after)
+    val cases = Seq(
+      ("documents", Tables.load(spark, sf, "documents")
+        .select(col("source"), col("text")), 8),
+      ("newline", docsOf("a\nb a\nb a\nb ab \na \na x\n")
+        .select(lit("s").as("source"), col("text")), 4),
+      ("emoji", docsOf("\ud83d\ude00\ud83d\ude00 \ud83d\ude00b",
+        "\ud83d\ude00\ud83d\ude00 b\ud83d\ude00")
+        .select(col("doc_id").cast("string").as("source"), col("text")), 4),
+      ("code-point tie", docsOf("\ud83d\ude00\ud83d\ude00\ud83d\ude00",
+        "\uff41\uff41\uff41")
+        .select(col("doc_id").cast("string").as("source"), col("text")), 3))
+    cases.foreach { case (name, df, rounds) =>
+      withClue(s"$name: ") {
+        val (refMerges, refVocab) = referenceBpe(df, "text", rounds)
+        assert(refMerges.nonEmpty)
+        assert(learned(df, "text", rounds) === refMerges)
+        assert(encoded(df, "source", "text", rounds) ===
+          referenceEncode(df, "source", "text", refVocab))
+      }
+    }
+  }
+
+  test("bpe output columns keep their names and Spark types") {
+    val df = docsOf("low lower").withColumn("src", lit("s"))
+    def shape(d: DataFrame) = d.schema.map(f => f.name -> f.dataType)
+    assert(shape(TextAnalysis.bpeLearn(df, "text", rounds = 2)) === Seq(
+      "round" -> IntegerType, "lhs" -> StringType, "rhs" -> StringType,
+      "merged" -> StringType, "pair_count" -> LongType))
+    assert(shape(TextAnalysis.bpeEncode(df, "src", "text", rounds = 2)) ===
+      Seq("src" -> StringType, "n_words" -> LongType,
+        "n_tokens" -> LongType, "fert_ppm" -> LongType))
+  }
+
+  test("an exhausted vocabulary keeps its sequences") {
+    // "ab" → "a b </w>" → "ab </w>" → "ab</w>": round 3 has no pair
+    // left, so it adds no merge and every word keeps its last sequence
+    val df = docsOf("ab").withColumn("src", lit("s"))
+    assert(learned(df, "text", 3).map(_._4) === Seq("ab", "ab</w>"))
+    assert(encoded(df, "src", "text", 3) === Seq(("s", 1L, 1L)))
   }
 
   test("merge application consumes the shared boundary space (run semantics)") {
