@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, to_json, xxhash64}
+import graft.tools.Harness
 
 /** Per-query timings: one cold run, then `median`/`min`/`max` over
   * the warm iterations (sorted); `retries` counts contention retry
@@ -56,20 +57,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     // ERROR, not WARN: the WindowExec "No Partition Defined" advisory
     // fires once per window-global entry per iteration (~hundreds of
     // lines/run) and the driver parses the compact JSON line out of a
     // ~2000-char stdout tail — a WARN flood between the line and EOF
     // would push it out of the window. Real failures still surface:
     // query exceptions are caught and reported in the `errors` field.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR")
     // warm the session once (parquet footers, codegen, shuffle infra)
     // so the first timed query isn't charged for one-time init
     Tables.names.foreach { t =>
@@ -168,29 +162,18 @@ object Bench {
     // reported under `extras` and excluded from the headline total so
     // round-over-round totals compare gate-to-gate
     val extras = bench(PipelineQueries.benchExtras)
-    // full control-char escaping (same table as Verify.q): an
-    // exception message carrying a tab or newline must not produce
-    // invalid JSON that crashes soak_compare.py downstream
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     def objOf(rs: Map[String, BenchTimes])(f: BenchTimes => Double): String =
-      rs.map { case (k, v) => jstr(k) + ":" + f(v) }
+      rs.map { case (k, v) => Harness.json(k) + ":" + f(v) }
         .mkString("{", ",", "}")
     def obj(f: BenchTimes => Double): String = objOf(results)(f)
-    val errObj = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
+    val errObj = errors
+      .map { case (k, v) => Harness.json(k) + ":" + Harness.json(v) }
       .mkString("{", ",", "}")
     val total = results.values.map(_.median).sum
     // only entries that actually retried appear in `retries` (keeps
     // the line compact; absent = 0)
     val retryObj = results.filter(_._2.retries > 0)
-      .map { case (k, v) => jstr(k) + ":" + v.retries }
+      .map { case (k, v) => Harness.json(k) + ":" + v.retries }
       .mkString("{", ",", "}")
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","warm_iters":$warmIters,"queries":${obj(_.median)},"cold":${obj(_.cold)},"warm_min":${obj(_.min)},"warm_max":${obj(_.max)},"retries":$retryObj,"extras":${objOf(extras)(_.median)},"extras_cold":${objOf(extras)(_.cold)},"errors":$errObj,"sf":"$sfDir"}"""
@@ -207,7 +190,7 @@ object Bench {
     // (r12 verdict item 2). bench_out.json stays the "latest run" file
     // every existing tool reads; bench_out_c<cpus>.json survives a
     // later run at a different core count.
-    for (p <- Seq("bench_out.json", s"bench_out_c$cpus.json"))
+    for (p <- Seq("bench_out.json", s"bench_out_c${Harness.cpus}.json"))
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(p), (json + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => }

@@ -336,45 +336,24 @@ object DialectQueries {
       |FROM nation JOIN region ON n_regionkey = r_regionkey
       |GROUP BY r_name ORDER BY r_name""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "jd1_jdbc_engine" -> jd1,
-    "sq16_dialect_multicol_in_3vl" -> sq16,
-    "sq17_dialect_optional_join" -> sq17,
-    "sq15_dialect_left_join_on_subquery" -> sq15,
-    "sq14_dialect_having_subquery" -> sq14,
-    "sq11_dialect_argmax" -> sq11,
-    "sq12_dialect_events" -> sq12,
-    "sq13_dialect_composition" -> sq13,
-    "sq1_dialect_join_param_agg" -> sq1,
-    "sq2_dialect_left_join" -> sq2,
-    "sq3_dialect_in_subquery" -> sq3,
-    "sq4_dialect_scalars" -> sq4,
-    "sq5_dialect_nav_pushdown" -> sq5,
-    "sq6_dialect_having" -> sq6,
-    "sq7_dialect_exists" -> sq7,
-    "sq8_dialect_match_variant" -> sq8,
-    "sq9_dialect_datetime_global_agg" -> sq9,
-    "sq10_dialect_lazy_fields_offset" -> sq10,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "jd1_jdbc_engine" -> jd1Sql,
-    "sq16_dialect_multicol_in_3vl" -> sq16Sql,
-    "sq17_dialect_optional_join" -> sq17Sql,
-    "sq15_dialect_left_join_on_subquery" -> sq15Sql,
-    "sq14_dialect_having_subquery" -> sq14Sql,
-    "sq11_dialect_argmax" -> sq11Sql,
-    "sq12_dialect_events" -> sq12Sql,
-    "sq13_dialect_composition" -> sq13Sql,
-    "sq1_dialect_join_param_agg" -> sq1Sql,
-    "sq2_dialect_left_join" -> sq2Sql,
-    "sq3_dialect_in_subquery" -> sq3Sql,
-    "sq4_dialect_scalars" -> sq4Sql,
-    "sq5_dialect_nav_pushdown" -> sq5Sql,
-    "sq6_dialect_having" -> sq6Sql,
-    "sq7_dialect_exists" -> sq7Sql,
-    "sq8_dialect_match_variant" -> sq8Sql,
-    "sq9_dialect_datetime_global_agg" -> sq9Sql,
-    "sq10_dialect_lazy_fields_offset" -> sq10Sql,
+  val entries: Seq[Entry] = Seq(
+    Entry("jd1_jdbc_engine", jd1, jd1Sql),
+    Entry("sq16_dialect_multicol_in_3vl", sq16, sq16Sql),
+    Entry("sq17_dialect_optional_join", sq17, sq17Sql),
+    Entry("sq15_dialect_left_join_on_subquery", sq15, sq15Sql),
+    Entry("sq14_dialect_having_subquery", sq14, sq14Sql),
+    Entry("sq11_dialect_argmax", sq11, sq11Sql),
+    Entry("sq12_dialect_events", sq12, sq12Sql),
+    Entry("sq13_dialect_composition", sq13, sq13Sql),
+    Entry("sq1_dialect_join_param_agg", sq1, sq1Sql),
+    Entry("sq2_dialect_left_join", sq2, sq2Sql),
+    Entry("sq3_dialect_in_subquery", sq3, sq3Sql),
+    Entry("sq4_dialect_scalars", sq4, sq4Sql),
+    Entry("sq5_dialect_nav_pushdown", sq5, sq5Sql),
+    Entry("sq6_dialect_having", sq6, sq6Sql),
+    Entry("sq7_dialect_exists", sq7, sq7Sql),
+    Entry("sq8_dialect_match_variant", sq8, sq8Sql),
+    Entry("sq9_dialect_datetime_global_agg", sq9, sq9Sql),
+    Entry("sq10_dialect_lazy_fields_offset", sq10, sq10Sql),
   )
 }

@@ -132,12 +132,9 @@ object DmlQueries {
       |UNION ALL SELECT 150, 'new', 5
       |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dm1_dml_roundtrip" -> dm1Roundtrip,
-    "dm2_dml_subquery_where" -> dm2Subquery,
-    "dm3_upsert" -> dm3Upsert)
-  val oracleSql: Map[String, String] = Map(
-    "dm1_dml_roundtrip" -> dm1Sql,
-    "dm2_dml_subquery_where" -> dm2Sql,
-    "dm3_upsert" -> dm3Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("dm1_dml_roundtrip", dm1Roundtrip, dm1Sql),
+    Entry("dm2_dml_subquery_where", dm2Subquery, dm2Sql),
+    Entry("dm3_upsert", dm3Upsert, dm3Sql),
+  )
 }

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 import graft.pipeline.{Dedup, Similarity, TextAnalysis, Multimodal}
 
 /** Training-data pipeline operators wired into the driver's
-  * correctness gate. Oracle SQL is provided wherever the computation
-  * is portable between Spark and DuckDB (md5, regexp in the common
-  * RE2 subset, double-precision fold-order-identical arithmetic);
-  * hash-function-dependent ops (xxhash64 minhash/simhash, LSH
-  * bucketing) are rows-only here and covered by ScalaTest instead.
+  * correctness gate. Every entry carries oracle SQL: each one runs
+  * on a computation portable between Spark and DuckDB (md5, regexp
+  * in the common RE2 subset, double-precision fold-order-identical
+  * arithmetic). The production hash families (xxhash64
+  * minhash/simhash, LSH bucketing) have no external twin; they are
+  * covered by ScalaTest and timed as Bench `extras`.
   */
 object PipelineQueries {
 
@@ -181,20 +182,13 @@ object PipelineQueries {
       "vec_id", "embedding", lo = 0.05, hi = 0.95, k = 10, nprobe = 6)
   }
 
-  // lazy: the map is declared above the entry vals it references —
-  // eager init would capture a null fn for any later-defined builder
-  // (bit qp1x in r12's first bench run)
+  // lazy, like any list of builders: eager init would capture a null
+  // fn for a builder defined further down the object (r12's first
+  // bench run hit exactly that)
   private[graft] lazy val benchExtras: Map[String, Q] = Map(
     "dd2x_minhash_prod_hash" -> dd2xProdMinhash,
     "pq2x_ivfadc_trained" -> pq2xTrainedIvfAdc,
     "ss5x_hard_negatives_trained" -> ss5xTrainedHardNegatives,
-    // r12 retired these two from the gate as redundant; the r12
-    // verdict ruled the retirement a gate regression, so r13 restored
-    // them to the gate + oracle maps. The x-twins stay because bench
-    // entries are never removed once published (extras are excluded
-    // from the headline total, so the duplication costs nothing there).
-    "qp1x_quality_percentile" -> qp1Percentile,
-    "ct2x_contamination_bloom" -> ct2BloomContamination,
   )
 
   /** Shared oracle-SQL fragment: portable MinHash signatures, LSH
@@ -3242,6 +3236,9 @@ object PipelineQueries {
 
   /** Shared CTE chain: toks → v → s0 → (p_k, b_k, s_k) per round.
     * s`rounds` is the fully merged vocabulary; b_k the round-k merge.
+    * Once no pair is left, b_k is empty and its scalar subqueries are
+    * NULL; `coalesce` then keeps every sequence as it is, as the
+    * engine does (without it `replace` would NULL them all).
     */
   private def bpeCteSql(rounds: Int): String = {
     val head =
@@ -3269,10 +3266,10 @@ object PipelineQueries {
         |  SELECT pair, pair_count FROM p$k
         |  ORDER BY pair_count DESC, pair LIMIT 1),
         |s$k AS MATERIALIZED (
-        |  SELECT word, freq, trim(replace(' ' || seq || ' ',
+        |  SELECT word, freq, coalesce(trim(replace(' ' || seq || ' ',
         |    (SELECT ' ' || pair || ' ' FROM b$k),
-        |    (SELECT ' ' || replace(pair, ' ', '') || ' ' FROM b$k)))
-        |    AS seq
+        |    (SELECT ' ' || replace(pair, ' ', '') || ' ' FROM b$k))),
+        |    seq) AS seq
         |  FROM s${k - 1})""".stripMargin
     }
     (head +: steps).mkString(",\n")
@@ -4523,251 +4520,129 @@ object PipelineQueries {
        |FROM g ORDER BY source""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "sm10_waterfill_budget" -> sm10Waterfill,
-    "an2_priority_rollup" -> an2Rollup,
-    "pv1_type_pivot" -> pv1TypePivot,
-    "rr4_sparse_cosine" -> rr4SparseCosine,
-    "fz1_fuzzy_join" -> fz1FuzzyJoin,
-    "ka2_l_diversity" -> ka2LDiversity,
-    "gr3_personalized_pr" -> gr3PersonalizedPr,
-    "gr4_hits" -> gr4Hits,
-    "ka3_dp_release" -> ka3DpRelease,
-    "em1_truncation_fidelity" -> em1TruncationFidelity,
-    "ca2_corpus_card" -> ca2CorpusCard,
-    "se1_schema_evolution" -> se1SchemaEvolution,
-    "fc1_compaction_plan" -> fc1CompactionPlan,
-    "ka1_k_anonymity" -> ka1KAnonymity,
-    "ii1_inverted_index" -> ii1InvertedIndex,
-    "ii2_incremental_index" -> ii2IncrementalIndex,
-    "rr3_rrf_fusion" -> rr3RrfFusion,
-    "ql1_quality_logistic" -> ql1QualityLogistic,
-    "tx14_script_profile" -> tx14ScriptProfile,
-    "ur1_domain_stats" -> ur1DomainStats,
-    "dr1_term_drift" -> dr1TermDrift,
-    "kc1_kcore_profile" -> kc1KCoreProfile,
-    "sh1_shuffle_shards" -> sh1ShuffleShards,
-    "lp1_label_propagation" -> lp1LabelProp,
-    "tr1_triangle_stats" -> tr1TriangleStats,
-    "hl1_hll_distinct" -> hl1HllDistinct,
-    "up1_epoch_upsample" -> up1EpochUpsample,
-    "hh1_cms_heavy_hitters" -> hh1CmsHeavyHitters,
-    "pc1_gram_sums" -> pc1GramSums,
-    "bp2_bpe_learn" -> bp2BpeLearn,
-    "bp3_bpe_encode" -> bp3BpeEncode,
-    "wn1_winnow_fingerprints" -> wn1Winnow,
-    "bp1_bpe_pairs" -> bp1BpePairs,
-    "qp2_percentile_scalable" -> qp2PercentileScalable,
-    "ct4_winnow_contamination" -> ct4WinnowContamination,
-    "gq1_gopher_rules" -> gq1Gopher,
-    "cl1_c4_line_clean" -> cl1C4Clean,
-    "ir1_dsir_weights" -> ir1DsirWeights,
-    "rr2_phrase_search" -> rr2PhraseSearch,
-    "rr1_bm25_topk" -> rr1Bm25,
-    "rr5_learned_sparse" -> rr5LearnedSparse,
-    "nv1_ngram_novelty" -> nv1Novelty,
-    "qp1_quality_percentile" -> qp1Percentile,
-    "ca1_source_keyness" -> ca1Keyness,
-    "gr1_pagerank" -> gr1PageRank,
-    "gr2_pagerank_dangling" -> gr2PageRankDangling,
-    "df1_snapshot_diff" -> df1SnapshotDiff,
-    "tx12_token_entropy" -> tx12Entropy,
-    "pr1_percentile_rank" -> pr1PercentileRank,
-    "jc1_join_cardinality" -> jc1JoinCardinality,
-    "fh1_hashing_trick" -> fh1HashingTrick,
-    "tx13_pmi_collocations" -> tx13Pmi,
-    "cp1_curation_pipeline" -> cp1Curation,
-    "cp3_full_pass" -> cp3FullPass,
-    "dd1_exact_dedup" -> dd1ExactDedup,
-    "dd2_minhash_lsh_pairs" -> dd2MinhashLsh,
-    "dd3_simhash" -> dd3Simhash,
-    "dd4_ngram_jaccard" -> dd4NgramJaccard,
-    "dd5_embed_cosine_neardup" -> dd5EmbedCosine,
-    "dd6_neardup_clusters" -> dd6Cluster,
-    "dd7_incremental_dedup" -> dd7Incremental,
-    "dd8_cluster_keepers" -> dd8Keepers,
-    "dd9_substr_dedup" -> dd9SubstrDedup,
-    "dd10_embed_neardup_lsh" -> dd10CosinePairs,
-    "dd11_line_dedup" -> dd11LineDedup,
-    "cp2_semantic_dedup" -> cp2SemanticDedup,
-    "sm1_stratified_sample" -> sm1Sample,
-    "sm2_source_cap" -> sm2Cap,
-    "sm3_mixture_rates" -> sm3Mixture,
-    "sm7_temperature_mix" -> sm7Temperature,
-    "bk1_bucketed_join" -> bk1BucketedJoin,
-    "fm1_csv_roundtrip" -> fm1CsvRoundtrip,
-    "fm2_jsonl_roundtrip" -> fm2JsonlRoundtrip,
-    "fm3_partitioned_prune" -> fm3PartitionedPrune,
-    "fm4_orc_roundtrip" -> fm4OrcRoundtrip,
-    "zo1_zorder_tiles" -> zo1ZorderTiles,
-    "sm4_exact_sample" -> sm4Exact,
-    "sm5_token_budget" -> sm5Budget,
-    "sm8_weighted_sample" -> sm8Weighted,
-    "sm9_top_per_source" -> sm9TopPerSource,
-    "sp1_split_assign" -> sp1Splits,
-    "pf3_histogram" -> pf3Histogram,
-    "sm6_diverse_sample" -> sm6Diverse,
-    "tx9_normalize" -> tx9Normalize,
-    "tx10_lm_score" -> tx10LmScore,
-    "tx11_chunking" -> tx11Chunk,
-    "js1_json_extract" -> js1JsonExtract,
-    "ct3_source_overlap" -> ct3SourceOverlap,
-    "pk1_sequence_packing" -> pk1Pack,
-    "qz1_embed_quantize" -> qz1Quantize,
-    "mm2_resize_features" -> mm2ResizeFeatures,
-    "mm3_image_codec" -> mm3ImageCodec,
-    "mm4_audio_codec" -> mm4AudioCodec,
-    "mm5_video_codec" -> mm5VideoCodec,
-    "mm6_image_resize" -> mm6ImageResize,
-    "sj1_salted_join" -> sj1SaltedJoin,
-    "hk1_hot_keys" -> hk1HotKeys,
-    "pf4_z_outliers" -> pf4Outliers,
-    "ss1_cosine_topk_brute" -> ss1BruteTopK,
-    "ss4_hard_negatives" -> ss4HardNegatives,
-    "ss5_hard_negatives_ivf" -> ss5HardNegativesIvf,
-    "ss2_cosine_topk_lsh" -> ss2LshTopK,
-    "ss3_cosine_topk_ivf" -> ss3IvfTopK,
-    "km1_cluster_profile" -> km1ClusterProfile,
-    "km2_trained_profile" -> km2TrainedProfile,
-    "pq1_pq_profile" -> pq1PqProfile,
-    "pq2_ivfadc_topk" -> pq2IvfAdcTopK,
-    "tx1_text_quality" -> tx1Quality,
-    "tx2_token_counts" -> tx2Tokens,
-    "tx3_fingerprint" -> tx3Fingerprint,
-    "tx4_langid" -> tx4LangId,
-    "tx5_pii_redact" -> tx5Redact,
-    "tx6_repetition" -> tx6Repetition,
-    "tx7_vocab_topk" -> tx7Vocab,
-    "tx8_tfidf_keywords" -> tx8Tfidf,
-    "ct1_contamination" -> ct1Contamination,
-    "ct2_contamination_bloom" -> ct2BloomContamination,
-    "pf1_numeric_profile" -> pf1Profile,
-    "pf1a_numeric_profile_approx" -> pf1aApprox,
-    "pf2_corr_matrix" -> pf2Corr,
-    "mm1_media_features" -> mm1MediaFeatures,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "sm10_waterfill_budget" -> sm10Sql,
-    "an2_priority_rollup" -> an2Sql,
-    "pv1_type_pivot" -> pv1Sql,
-    "rr4_sparse_cosine" -> rr4Sql,
-    "fz1_fuzzy_join" -> fz1Sql,
-    "ka2_l_diversity" -> ka2Sql,
-    "gr3_personalized_pr" -> gr3Sql,
-    "gr4_hits" -> gr4Sql,
-    "ka3_dp_release" -> ka3Sql,
-    "em1_truncation_fidelity" -> em1Sql,
-    "ca2_corpus_card" -> ca2Sql,
-    "se1_schema_evolution" -> se1Sql,
-    "fc1_compaction_plan" -> fc1Sql,
-    "ka1_k_anonymity" -> ka1Sql,
-    "ii1_inverted_index" -> ii1Sql,
-    "ii2_incremental_index" -> ii1Sql, // merge ≡ batch rebuild, by design
-    "rr3_rrf_fusion" -> rr3Sql,
-    "ql1_quality_logistic" -> ql1Sql,
-    "tx14_script_profile" -> tx14Sql,
-    "ur1_domain_stats" -> ur1Sql,
-    "dr1_term_drift" -> dr1Sql,
-    "kc1_kcore_profile" -> kc1Sql,
-    "sh1_shuffle_shards" -> sh1Sql,
-    "lp1_label_propagation" -> lp1Sql,
-    "tr1_triangle_stats" -> tr1Sql,
-    "hl1_hll_distinct" -> hl1Sql,
-    "up1_epoch_upsample" -> up1Sql,
-    "hh1_cms_heavy_hitters" -> hh1Sql,
-    "pc1_gram_sums" -> pc1Sql,
-    "bp2_bpe_learn" -> bp2Sql,
-    "bp3_bpe_encode" -> bp3Sql,
-    "wn1_winnow_fingerprints" -> wn1Sql,
-    "bp1_bpe_pairs" -> bp1Sql,
-    "qp2_percentile_scalable" -> qp2Sql,
-    "ct4_winnow_contamination" -> ct4Sql,
-    "gq1_gopher_rules" -> gq1Sql,
-    "cl1_c4_line_clean" -> cl1Sql,
-    "ir1_dsir_weights" -> ir1Sql,
-    "rr2_phrase_search" -> rr2Sql,
-    "rr1_bm25_topk" -> rr1Sql,
-    "rr5_learned_sparse" -> rr5Sql,
-    "nv1_ngram_novelty" -> nv1Sql,
-    "qp1_quality_percentile" -> qp1Sql,
-    "ca1_source_keyness" -> ca1Sql,
-    "gr1_pagerank" -> gr1Sql,
-    "gr2_pagerank_dangling" -> gr2Sql,
-    "df1_snapshot_diff" -> df1Sql,
-    "tx12_token_entropy" -> tx12Sql,
-    "pr1_percentile_rank" -> pr1Sql,
-    "jc1_join_cardinality" -> jc1Sql,
-    "fh1_hashing_trick" -> fh1Sql,
-    "tx13_pmi_collocations" -> tx13Sql,
-    "tx6_repetition" -> tx6Sql,
-    "tx7_vocab_topk" -> tx7Sql,
-    "tx8_tfidf_keywords" -> tx8Sql,
-    "ct1_contamination" -> ct1Sql,
-    "ct2_contamination_bloom" -> ct1Sql, // Bloom path ≡ ct1 by construction
-    "pf1_numeric_profile" -> pf1Sql,
-    "pf1a_numeric_profile_approx" -> pf1aSql,
-    "pf2_corr_matrix" -> pf2Sql,
-    "cp1_curation_pipeline" -> cp1Sql,
-    "cp3_full_pass" -> cp3Sql,
-    "dd1_exact_dedup" -> dd1Sql,
-    "dd2_minhash_lsh_pairs" -> dd2Sql,
-    "dd3_simhash" -> dd3Sql,
-    "dd4_ngram_jaccard" -> dd4Sql,
-    "dd5_embed_cosine_neardup" -> dd5Sql,
-    "dd6_neardup_clusters" -> dd6Sql,
-    "dd7_incremental_dedup" -> dd7Sql,
-    "dd8_cluster_keepers" -> dd8Sql,
-    "dd9_substr_dedup" -> dd9Sql,
-    "dd10_embed_neardup_lsh" -> dd10Sql,
-    "dd11_line_dedup" -> dd11Sql,
-    "cp2_semantic_dedup" -> cp2Sql,
-    "sm1_stratified_sample" -> sm1Sql,
-    "sm2_source_cap" -> sm2Sql,
-    "sm3_mixture_rates" -> sm3Sql,
-    "sm7_temperature_mix" -> sm7Sql,
-    "bk1_bucketed_join" -> bk1Sql,
-    "fm1_csv_roundtrip" -> fmRoundtripSql,
-    "fm2_jsonl_roundtrip" -> fmRoundtripSql,
-    "fm3_partitioned_prune" -> fm3Sql,
-    "fm4_orc_roundtrip" -> fmRoundtripSql,
-    "zo1_zorder_tiles" -> zo1Sql,
-    "sm4_exact_sample" -> sm4Sql,
-    "sm5_token_budget" -> sm5Sql,
-    "sm8_weighted_sample" -> sm8Sql,
-    "sm9_top_per_source" -> sm9Sql,
-    "sp1_split_assign" -> sp1Sql,
-    "pf3_histogram" -> pf3Sql,
-    "sm6_diverse_sample" -> sm6Sql,
-    "tx9_normalize" -> tx9Sql,
-    "tx10_lm_score" -> tx10Sql,
-    "tx11_chunking" -> tx11Sql,
-    "js1_json_extract" -> js1Sql,
-    "ct3_source_overlap" -> ct3Sql,
-    "pk1_sequence_packing" -> pk1Sql,
-    "qz1_embed_quantize" -> qz1Sql,
-    "mm2_resize_features" -> mm2Sql,
-    "sj1_salted_join" -> sj1Sql,
-    "hk1_hot_keys" -> hk1Sql,
-    "pf4_z_outliers" -> pf4Sql,
-    "ss1_cosine_topk_brute" -> ss1Sql,
-    "ss4_hard_negatives" -> ss4Sql,
-    "ss5_hard_negatives_ivf" -> ss5Sql,
-    "ss2_cosine_topk_lsh" -> ss2Sql,
-    "ss3_cosine_topk_ivf" -> ss3Sql,
-    "km1_cluster_profile" -> km1Sql,
-    "km2_trained_profile" -> km2Sql,
-    "pq1_pq_profile" -> pq1Sql,
-    "pq2_ivfadc_topk" -> pq2Sql,
-    "tx1_text_quality" -> tx1Sql,
-    "tx2_token_counts" -> tx2Sql,
-    "tx3_fingerprint" -> tx3Sql,
-    "tx4_langid" -> tx4Sql,
-    "tx5_pii_redact" -> tx5Sql,
-    "mm1_media_features" -> mm1Sql,
-    "mm3_image_codec" -> mm3Sql,
-    "mm4_audio_codec" -> mm4Sql,
-    "mm5_video_codec" -> mm5Sql,
-    "mm6_image_resize" -> mm6Sql,
+  val entries: Seq[Entry] = Seq(
+    Entry("sm10_waterfill_budget", sm10Waterfill, sm10Sql),
+    Entry("an2_priority_rollup", an2Rollup, an2Sql),
+    Entry("pv1_type_pivot", pv1TypePivot, pv1Sql),
+    Entry("rr4_sparse_cosine", rr4SparseCosine, rr4Sql),
+    Entry("fz1_fuzzy_join", fz1FuzzyJoin, fz1Sql),
+    Entry("ka2_l_diversity", ka2LDiversity, ka2Sql),
+    Entry("gr3_personalized_pr", gr3PersonalizedPr, gr3Sql),
+    Entry("gr4_hits", gr4Hits, gr4Sql),
+    Entry("ka3_dp_release", ka3DpRelease, ka3Sql),
+    Entry("em1_truncation_fidelity", em1TruncationFidelity, em1Sql),
+    Entry("ca2_corpus_card", ca2CorpusCard, ca2Sql),
+    Entry("se1_schema_evolution", se1SchemaEvolution, se1Sql),
+    Entry("fc1_compaction_plan", fc1CompactionPlan, fc1Sql),
+    Entry("ka1_k_anonymity", ka1KAnonymity, ka1Sql),
+    Entry("ii1_inverted_index", ii1InvertedIndex, ii1Sql),
+    // merge ≡ batch rebuild, by design
+    Entry("ii2_incremental_index", ii2IncrementalIndex, ii1Sql),
+    Entry("rr3_rrf_fusion", rr3RrfFusion, rr3Sql),
+    Entry("ql1_quality_logistic", ql1QualityLogistic, ql1Sql),
+    Entry("tx14_script_profile", tx14ScriptProfile, tx14Sql),
+    Entry("ur1_domain_stats", ur1DomainStats, ur1Sql),
+    Entry("dr1_term_drift", dr1TermDrift, dr1Sql),
+    Entry("kc1_kcore_profile", kc1KCoreProfile, kc1Sql),
+    Entry("sh1_shuffle_shards", sh1ShuffleShards, sh1Sql),
+    Entry("lp1_label_propagation", lp1LabelProp, lp1Sql),
+    Entry("tr1_triangle_stats", tr1TriangleStats, tr1Sql),
+    Entry("hl1_hll_distinct", hl1HllDistinct, hl1Sql),
+    Entry("up1_epoch_upsample", up1EpochUpsample, up1Sql),
+    Entry("hh1_cms_heavy_hitters", hh1CmsHeavyHitters, hh1Sql),
+    Entry("pc1_gram_sums", pc1GramSums, pc1Sql),
+    Entry("bp2_bpe_learn", bp2BpeLearn, bp2Sql),
+    Entry("bp3_bpe_encode", bp3BpeEncode, bp3Sql),
+    Entry("wn1_winnow_fingerprints", wn1Winnow, wn1Sql),
+    Entry("bp1_bpe_pairs", bp1BpePairs, bp1Sql),
+    Entry("qp2_percentile_scalable", qp2PercentileScalable, qp2Sql),
+    Entry("ct4_winnow_contamination", ct4WinnowContamination, ct4Sql),
+    Entry("gq1_gopher_rules", gq1Gopher, gq1Sql),
+    Entry("cl1_c4_line_clean", cl1C4Clean, cl1Sql),
+    Entry("ir1_dsir_weights", ir1DsirWeights, ir1Sql),
+    Entry("rr2_phrase_search", rr2PhraseSearch, rr2Sql),
+    Entry("rr1_bm25_topk", rr1Bm25, rr1Sql),
+    Entry("rr5_learned_sparse", rr5LearnedSparse, rr5Sql),
+    Entry("nv1_ngram_novelty", nv1Novelty, nv1Sql),
+    Entry("qp1_quality_percentile", qp1Percentile, qp1Sql),
+    Entry("ca1_source_keyness", ca1Keyness, ca1Sql),
+    Entry("gr1_pagerank", gr1PageRank, gr1Sql),
+    Entry("gr2_pagerank_dangling", gr2PageRankDangling, gr2Sql),
+    Entry("df1_snapshot_diff", df1SnapshotDiff, df1Sql),
+    Entry("tx12_token_entropy", tx12Entropy, tx12Sql),
+    Entry("pr1_percentile_rank", pr1PercentileRank, pr1Sql),
+    Entry("jc1_join_cardinality", jc1JoinCardinality, jc1Sql),
+    Entry("fh1_hashing_trick", fh1HashingTrick, fh1Sql),
+    Entry("tx13_pmi_collocations", tx13Pmi, tx13Sql),
+    Entry("cp1_curation_pipeline", cp1Curation, cp1Sql),
+    Entry("cp3_full_pass", cp3FullPass, cp3Sql),
+    Entry("dd1_exact_dedup", dd1ExactDedup, dd1Sql),
+    Entry("dd2_minhash_lsh_pairs", dd2MinhashLsh, dd2Sql),
+    Entry("dd3_simhash", dd3Simhash, dd3Sql),
+    Entry("dd4_ngram_jaccard", dd4NgramJaccard, dd4Sql),
+    Entry("dd5_embed_cosine_neardup", dd5EmbedCosine, dd5Sql),
+    Entry("dd6_neardup_clusters", dd6Cluster, dd6Sql),
+    Entry("dd7_incremental_dedup", dd7Incremental, dd7Sql),
+    Entry("dd8_cluster_keepers", dd8Keepers, dd8Sql),
+    Entry("dd9_substr_dedup", dd9SubstrDedup, dd9Sql),
+    Entry("dd10_embed_neardup_lsh", dd10CosinePairs, dd10Sql),
+    Entry("dd11_line_dedup", dd11LineDedup, dd11Sql),
+    Entry("cp2_semantic_dedup", cp2SemanticDedup, cp2Sql),
+    Entry("sm1_stratified_sample", sm1Sample, sm1Sql),
+    Entry("sm2_source_cap", sm2Cap, sm2Sql),
+    Entry("sm3_mixture_rates", sm3Mixture, sm3Sql),
+    Entry("sm7_temperature_mix", sm7Temperature, sm7Sql),
+    Entry("bk1_bucketed_join", bk1BucketedJoin, bk1Sql),
+    Entry("fm1_csv_roundtrip", fm1CsvRoundtrip, fmRoundtripSql),
+    Entry("fm2_jsonl_roundtrip", fm2JsonlRoundtrip, fmRoundtripSql),
+    Entry("fm3_partitioned_prune", fm3PartitionedPrune, fm3Sql),
+    Entry("fm4_orc_roundtrip", fm4OrcRoundtrip, fmRoundtripSql),
+    Entry("zo1_zorder_tiles", zo1ZorderTiles, zo1Sql),
+    Entry("sm4_exact_sample", sm4Exact, sm4Sql),
+    Entry("sm5_token_budget", sm5Budget, sm5Sql),
+    Entry("sm8_weighted_sample", sm8Weighted, sm8Sql),
+    Entry("sm9_top_per_source", sm9TopPerSource, sm9Sql),
+    Entry("sp1_split_assign", sp1Splits, sp1Sql),
+    Entry("pf3_histogram", pf3Histogram, pf3Sql),
+    Entry("sm6_diverse_sample", sm6Diverse, sm6Sql),
+    Entry("tx9_normalize", tx9Normalize, tx9Sql),
+    Entry("tx10_lm_score", tx10LmScore, tx10Sql),
+    Entry("tx11_chunking", tx11Chunk, tx11Sql),
+    Entry("js1_json_extract", js1JsonExtract, js1Sql),
+    Entry("ct3_source_overlap", ct3SourceOverlap, ct3Sql),
+    Entry("pk1_sequence_packing", pk1Pack, pk1Sql),
+    Entry("qz1_embed_quantize", qz1Quantize, qz1Sql),
+    Entry("mm2_resize_features", mm2ResizeFeatures, mm2Sql),
+    Entry("mm3_image_codec", mm3ImageCodec, mm3Sql),
+    Entry("mm4_audio_codec", mm4AudioCodec, mm4Sql),
+    Entry("mm5_video_codec", mm5VideoCodec, mm5Sql),
+    Entry("mm6_image_resize", mm6ImageResize, mm6Sql),
+    Entry("sj1_salted_join", sj1SaltedJoin, sj1Sql),
+    Entry("hk1_hot_keys", hk1HotKeys, hk1Sql),
+    Entry("pf4_z_outliers", pf4Outliers, pf4Sql),
+    Entry("ss1_cosine_topk_brute", ss1BruteTopK, ss1Sql),
+    Entry("ss4_hard_negatives", ss4HardNegatives, ss4Sql),
+    Entry("ss5_hard_negatives_ivf", ss5HardNegativesIvf, ss5Sql),
+    Entry("ss2_cosine_topk_lsh", ss2LshTopK, ss2Sql),
+    Entry("ss3_cosine_topk_ivf", ss3IvfTopK, ss3Sql),
+    Entry("km1_cluster_profile", km1ClusterProfile, km1Sql),
+    Entry("km2_trained_profile", km2TrainedProfile, km2Sql),
+    Entry("pq1_pq_profile", pq1PqProfile, pq1Sql),
+    Entry("pq2_ivfadc_topk", pq2IvfAdcTopK, pq2Sql),
+    Entry("tx1_text_quality", tx1Quality, tx1Sql),
+    Entry("tx2_token_counts", tx2Tokens, tx2Sql),
+    Entry("tx3_fingerprint", tx3Fingerprint, tx3Sql),
+    Entry("tx4_langid", tx4LangId, tx4Sql),
+    Entry("tx5_pii_redact", tx5Redact, tx5Sql),
+    Entry("tx6_repetition", tx6Repetition, tx6Sql),
+    Entry("tx7_vocab_topk", tx7Vocab, tx7Sql),
+    Entry("tx8_tfidf_keywords", tx8Tfidf, tx8Sql),
+    Entry("ct1_contamination", ct1Contamination, ct1Sql),
+    // Bloom path ≡ ct1 by construction
+    Entry("ct2_contamination_bloom", ct2BloomContamination, ct1Sql),
+    Entry("pf1_numeric_profile", pf1Profile, pf1Sql),
+    Entry("pf1a_numeric_profile_approx", pf1aApprox, pf1aSql),
+    Entry("pf2_corr_matrix", pf2Corr, pf2Sql),
+    Entry("mm1_media_features", mm1MediaFeatures, mm1Sql),
   )
 }

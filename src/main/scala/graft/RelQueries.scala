@@ -233,29 +233,16 @@ object RelQueries {
       |  AND o_orderdate < TIMESTAMP '1996-01-01 00:00:00'
       |ORDER BY o_orderkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q1_agg" -> q1Agg,
-    "q2_join_agg" -> q2JoinAgg,
-    "q3_left_join" -> q3LeftJoin,
-    "q4_sort_limit_offset" -> q4SortLimitOffset,
-    "q5_in_subquery" -> q5InSubquery,
-    "q6_exists" -> q6Exists,
-    "q7_having" -> q7Having,
-    "q8_scalar_exprs" -> q8ScalarExprs,
-    "q9_global_agg" -> q9GlobalAgg,
-    "q10_datetime_arith" -> q10DatetimeArith,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q1_agg" -> q1AggSql,
-    "q2_join_agg" -> q2JoinAggSql,
-    "q3_left_join" -> q3LeftJoinSql,
-    "q4_sort_limit_offset" -> q4SortLimitOffsetSql,
-    "q5_in_subquery" -> q5InSubquerySql,
-    "q6_exists" -> q6ExistsSql,
-    "q7_having" -> q7HavingSql,
-    "q8_scalar_exprs" -> q8ScalarExprsSql,
-    "q9_global_agg" -> q9GlobalAggSql,
-    "q10_datetime_arith" -> q10DatetimeArithSql,
+  val entries: Seq[Entry] = Seq(
+    Entry("q1_agg", q1Agg, q1AggSql),
+    Entry("q2_join_agg", q2JoinAgg, q2JoinAggSql),
+    Entry("q3_left_join", q3LeftJoin, q3LeftJoinSql),
+    Entry("q4_sort_limit_offset", q4SortLimitOffset, q4SortLimitOffsetSql),
+    Entry("q5_in_subquery", q5InSubquery, q5InSubquerySql),
+    Entry("q6_exists", q6Exists, q6ExistsSql),
+    Entry("q7_having", q7Having, q7HavingSql),
+    Entry("q8_scalar_exprs", q8ScalarExprs, q8ScalarExprsSql),
+    Entry("q9_global_agg", q9GlobalAgg, q9GlobalAggSql),
+    Entry("q10_datetime_arith", q10DatetimeArith, q10DatetimeArithSql),
   )
 }

@@ -332,37 +332,20 @@ object StreamQueries {
       |GROUP BY ROLLUP(event_type, CAST(ts AS DATE))
       |ORDER BY gid, event_type, day""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "an1_daily_rollup" -> an1Rollup,
-    "ev1_windowed_agg" -> ev1WindowedAgg,
-    "ev5_cdc_upsert" -> ev5Upsert,
-    "ev6_stream_enrich" -> ev6Enrich,
-    "sw1_sliding_active_users" -> sw1SlidingActive,
-    "ev2_sessionize" -> ev2Sessions,
-    "ev3_dedup" -> ev3Dedup,
-    "ev4_interval_join" -> ev4Attribution,
-    "aj1_asof_join" -> aj1AsofJoin,
-    "sc1_scd2_build" -> sc1Scd2,
-    "ts1_gapfill" -> ts1Gapfill,
-    "rj1_range_join" -> rj1RangeJoin,
-    "rt1_cohort_retention" -> rt1Retention,
-    "fn1_funnel_stages" -> fn1Funnel,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "an1_daily_rollup" -> an1Sql,
-    "ev4_interval_join" -> ev4Sql,
-    "ev5_cdc_upsert" -> ev5Sql,
-    "ev6_stream_enrich" -> ev6Sql,
-    "sw1_sliding_active_users" -> sw1Sql,
-    "ev1_windowed_agg" -> ev1Sql,
-    "ev2_sessionize" -> ev2Sql,
-    "ev3_dedup" -> ev3Sql,
-    "aj1_asof_join" -> aj1Sql,
-    "sc1_scd2_build" -> sc1Sql,
-    "ts1_gapfill" -> ts1Sql,
-    "rj1_range_join" -> rj1Sql,
-    "rt1_cohort_retention" -> rt1Sql,
-    "fn1_funnel_stages" -> fn1Sql,
+  val entries: Seq[Entry] = Seq(
+    Entry("an1_daily_rollup", an1Rollup, an1Sql),
+    Entry("ev1_windowed_agg", ev1WindowedAgg, ev1Sql),
+    Entry("ev5_cdc_upsert", ev5Upsert, ev5Sql),
+    Entry("ev6_stream_enrich", ev6Enrich, ev6Sql),
+    Entry("sw1_sliding_active_users", sw1SlidingActive, sw1Sql),
+    Entry("ev2_sessionize", ev2Sessions, ev2Sql),
+    Entry("ev3_dedup", ev3Dedup, ev3Sql),
+    Entry("ev4_interval_join", ev4Attribution, ev4Sql),
+    Entry("aj1_asof_join", aj1AsofJoin, aj1Sql),
+    Entry("sc1_scd2_build", sc1Scd2, sc1Sql),
+    Entry("ts1_gapfill", ts1Gapfill, ts1Sql),
+    Entry("rj1_range_join", rj1RangeJoin, rj1Sql),
+    Entry("rt1_cohort_retention", rt1Retention, rt1Sql),
+    Entry("fn1_funnel_stages", fn1Funnel, fn1Sql),
   )
 }

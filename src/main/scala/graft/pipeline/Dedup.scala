@@ -333,8 +333,7 @@ object Dedup {
       shingleWidth: Int = 3, numHashes: Int = 32, bands: Int = 8,
       minEstJaccard: Double = 0.5,
       maxBucketSize: Int = 200,
-      portable: Boolean = false,
-      carryPayload: Boolean = true): DataFrame = {
+      portable: Boolean = false): DataFrame = {
     val sig = minhashSignatures(df, idCol, textCol, shingleWidth, numHashes,
       portable).cache()
     // carry the full signature through the bucket rows as one array:
@@ -356,33 +355,11 @@ object Dedup {
       // a USING join moves the join keys first — restore column order
       // before the positional renames below
       .select(col(idCol), col("sig"), col("band"), col("bucket"))
-    // carryPayload mirrors Similarity.cosineNearDupPairs' trade: ride
-    // the 32-long signature through the bucket exchange + pair
-    // distinct (saving two join-back shuffles), or bucket id-only and
-    // join the cached signatures back once per surviving pair side.
-    // 256 B signatures sit on the carry side of the trade (SOAK_r9);
-    // the toggle exists because production signature widths vary.
-    val candidates =
-      if (carryPayload) {
-        val b1 = buckets.toDF("id1", "sig1", "band", "bucket")
-        val b2 = buckets.toDF("id2", "sig2", "band", "bucket")
-        b1.join(b2, Seq("band", "bucket"))
-          .filter(col("id1") < col("id2"))
-          .select("id1", "sig1", "id2", "sig2").distinct()
-      } else {
-        val idb = buckets.select(col(idCol), col("band"), col("bucket"))
-        val p1 = idb.toDF("id1", "band", "bucket")
-        val p2 = idb.toDF("id2", "band", "bucket")
-        val pairIds = p1.join(p2, Seq("band", "bucket"))
-          .filter(col("id1") < col("id2"))
-          .select("id1", "id2").distinct()
-        val narrow = sig.select(col(idCol),
-          array((0 until numHashes).map(h => col(s"mh_$h")): _*).as("__s"))
-        pairIds
-          .join(narrow.toDF("id1", "sig1"), Seq("id1"))
-          .join(narrow.toDF("id2", "sig2"), Seq("id2"))
-          .select("id1", "sig1", "id2", "sig2")
-      }
+    val b1 = buckets.toDF("id1", "sig1", "band", "bucket")
+    val b2 = buckets.toDF("id2", "sig2", "band", "bucket")
+    val candidates = b1.join(b2, Seq("band", "bucket"))
+      .filter(col("id1") < col("id2"))
+      .select("id1", "sig1", "id2", "sig2").distinct()
     val agree = aggregate(
       zip_with(col("sig1"), col("sig2"),
         (x, y) => when(x === y, 1).otherwise(0)),

@@ -282,20 +282,14 @@ object Similarity {
     * pair once. NULL vectors are dropped up front (nothing is a
     * near-dup of NULL).
     *
-    * `carryPayload = true` rides the vectors on the bucket rows
-    * (bands× payload amplification in the bucket shuffle and the
-    * full vectors inside the cross-band pair `distinct`) so the
-    * rerank happens directly on the joined rows; `false` buckets
-    * id-only rows, distincts the narrow (id1, id2) pairs, and joins
-    * the vectors back once for the rerank — two extra equi-joins
-    * against the narrow (id, vec) frame, but every wide exchange
-    * gone. The right side of the trade depends on vector width:
-    * at 64 dims (256 B) the carry wins (SOAK_r9: the join-back's
-    * extra shuffles cost more than the amplified payload saves); at
-    * 256+ dims (1–4 KB production embeddings) the distinct exchange
-    * pays bands× KB-scale amplification per candidate and join-back
-    * wins. Measured at the 10× fixture in SOAK_r9; default stays
-    * carry for the gate's 64-dim corpus — flip it per corpus width.
+    * The vectors ride on the bucket rows through the bucket exchange
+    * and the cross-band pair `distinct`, so the rerank runs directly
+    * on the joined rows. Bucketing id-only rows and joining the
+    * vectors back per surviving pair side was measured and lost at
+    * production width: 56.7 s against 33.1 s at 256 dims on the 10×
+    * fixture (SOAK_r9). Its two extra joins scale with the
+    * candidates, which explode exactly when real duplicate mass is
+    * found.
     *
     * `bitsPerBand = 0` (the default) sizes buckets from the corpus
     * row count via [[deriveBits]] — fixed bits turn 10× data into
@@ -306,8 +300,7 @@ object Similarity {
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       minCosine: Double = 0.9, bands: Int = 4, bitsPerBand: Int = 0,
       seed: Long = 42L, dims: Int = 0,
-      maxBucketSize: Int = 1000,
-      carryPayload: Boolean = true): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame = {
     require(dims >= 0,
       s"cosineNearDupPairs: dims must be non-negative (0 = derive), got $dims")
     require(bitsPerBand >= 0,
@@ -343,30 +336,11 @@ object Similarity {
       // a USING join moves the join keys first — restore column order
       // before the positional renames below
       .select(col(idCol), col("vec"), col("band"), col("bucket"))
-    val candidates =
-      if (carryPayload) {
-        val b1 = buckets.toDF("id1", "v1", "band", "bucket")
-        val b2 = buckets.toDF("id2", "v2", "band", "bucket")
-        b1.join(b2, Seq("band", "bucket"))
-          .filter(col("id1") < col("id2"))
-          .select("id1", "v1", "id2", "v2").distinct()
-      } else {
-        // id-only bucket rows: Catalyst prunes `vec` out of the
-        // (band, bucket) exchange, the pair distinct is 16 bytes per
-        // candidate, and the vectors are fetched exactly once per
-        // SURVIVING pair side via two narrow equi-joins
-        val idb = buckets.select(col(idCol), col("band"), col("bucket"))
-        val p1 = idb.toDF("id1", "band", "bucket")
-        val p2 = idb.toDF("id2", "band", "bucket")
-        val pairIds = p1.join(p2, Seq("band", "bucket"))
-          .filter(col("id1") < col("id2"))
-          .select("id1", "id2").distinct()
-        val narrow = in.select(col(idCol), col(vecCol).as("__v"))
-        pairIds
-          .join(narrow.toDF("id1", "v1"), Seq("id1"))
-          .join(narrow.toDF("id2", "v2"), Seq("id2"))
-          .select("id1", "v1", "id2", "v2")
-      }
+    val b1 = buckets.toDF("id1", "v1", "band", "bucket")
+    val b2 = buckets.toDF("id2", "v2", "band", "bucket")
+    val candidates = b1.join(b2, Seq("band", "bucket"))
+      .filter(col("id1") < col("id2"))
+      .select("id1", "v1", "id2", "v2").distinct()
     candidates
       .select(col("id1"), col("id2"),
         cosine(col("v1"), col("v2")).as("cosine"))

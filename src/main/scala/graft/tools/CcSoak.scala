@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.pipeline.{Cluster, Dedup}
@@ -26,13 +25,7 @@ object CcSoak {
       "usage: CcSoak <sfDir> [maxIters]")
     val dir = args(0)
     val maxIters = if (args.length == 2) args(1).toInt else 20
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("WARN")
 
     val docs = Tables.load(spark, dir, "documents")
       .select("doc_id", "text", "source")
@@ -57,7 +50,7 @@ object CcSoak {
       s"""{"rounds":${stats.rounds},"converged":${stats.converged},""" +
         s""""n_pairs":$nPairs,"n_labeled":$nLabeled,""" +
         s""""largest_cluster":$largest,"giant_members":$giantMembers,""" +
-        s""""wall_sec":${Fmt.fmt("%.1f", wall)}}""")
+        s""""wall_sec":${Harness.fmt("%.1f", wall)}}""")
     spark.stop()
   }
 }

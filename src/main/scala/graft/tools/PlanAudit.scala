@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Entry, SparkEntry}
 
 /** Plan-hygiene sweep over EVERY gate entry: build each query's
   * physical plan at the given SF and flag the two shapes that do not
@@ -73,22 +72,15 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR")
     val cartesian = List.newBuilder[String]
     val unexpected = List.newBuilder[String]
     val allowlisted = List.newBuilder[String]
     val badTypes = List.newBuilder[String]
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.entries.sortBy(_.name).foreach { case Entry(name, build, _) =>
       try {
-        val df = fn(spark, sfDir)
+        val df = build(spark, sfDir)
         // same-sweep output-type lint (Verify refuses these at dump
         // time; flagging them here too makes the audit a one-stop
         // pre-ship check)
@@ -106,10 +98,9 @@ object PlanAudit {
             .linesIterator.next().take(160)
       }
     }
-    def arr(xs: List[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val errObj = errors.map { case (k, v) =>
-      "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    }.mkString("{", ",", "}")
+    def arr(xs: List[String]) = xs.map(Harness.json).mkString("[", ",", "]")
+    val errObj = errors.map { case (k, v) => Harness.json(k) + ":" + Harness.json(v) }
+      .mkString("{", ",", "}")
     val cart = cartesian.result()
     val unexp = unexpected.result()
     val badT = badTypes.result()

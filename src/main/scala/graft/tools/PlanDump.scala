@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.Entry
 
 /** Dump `.explain("formatted")` for gate entries to files — the
   * before/after plan evidence the optimization rounds commit under
@@ -9,8 +8,10 @@ import graft.SparkEntry
   *
   *   runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [names]
   *
-  * `names` = comma-separated entry names (or name prefixes); omitted =
-  * every gate entry. Each entry writes `<outDir>/<name>_<suffix>.txt`.
+  * `names` = comma-separated entry names (or name prefixes), selected
+  * as [[graft.Verify]] selects them: omitted = every gate entry, a
+  * name matching no entry is refused. Each entry writes
+  * `<outDir>/<name>_<suffix>.txt`.
   * Building a plan does not run the query, but entries whose
   * CONSTRUCTION runs bounded driver actions (centroid training, budget
   * probes) execute those, as in [[PlanAudit]].
@@ -20,28 +21,19 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("plans/r12")
     val suffix = args.lift(2).getOrElse("before")
-    val wanted: Option[Seq[String]] =
-      args.lift(3).map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
+    val wanted: Seq[String] = args.lift(3).toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     // "exec" as a 5th arg: materialize the frame first so the dump
     // shows the FINAL adaptive plan (runtime join conversions, AQE
     // shuffle reads) instead of the initial isFinalPlan=false one
     val exec = args.lift(4).contains("exec")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val entries = graft.Verify.select(wanted).sortBy(_.name)
+    val spark = Harness.session("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val entries = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      wanted.forall(ws => ws.exists(w => n == w || n.startsWith(w)))
-    }
     var failed = 0
-    entries.foreach { case (name, fn) =>
+    entries.foreach { case Entry(name, build, _) =>
       try {
-        val df = fn(spark, sfDir)
+        val df = build(spark, sfDir)
         // collect() drives THIS Dataset's own query execution (the
         // Bench materializer wraps df in a new plan, which would leave
         // df's AdaptiveSparkPlan un-finalized); entry outputs are

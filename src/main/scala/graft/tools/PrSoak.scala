@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.pipeline.Graph
@@ -25,13 +24,7 @@ object PrSoak {
     val dir = args(0)
     val tolGrid = if (args.length >= 2) args(1).toLong else 1000000L
     val maxIters = if (args.length == 3) args(2).toInt else 150
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("WARN")
 
     val ord = Tables.load(spark, dir, "orders").select("o_orderkey", "o_custkey")
     val li = Tables.load(spark, dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -49,7 +42,7 @@ object PrSoak {
       onRound = { (r, d) =>
         val now = System.nanoTime()
         System.err.println(
-          s"PRSOAK round=$r delta=$d wall=${Fmt.fmt("%.2f", (now - last) / 1e9)}s")
+          s"PRSOAK round=$r delta=$d wall=${Harness.fmt("%.2f", (now - last) / 1e9)}s")
         last = now
       })
     val nNodes = ranks.count()
@@ -57,7 +50,7 @@ object PrSoak {
     val wall = (System.nanoTime() - t0) / 1e9
     println(s"""{"n_nodes":$nNodes,"rounds":${stats.rounds},""" +
       s""""converged":${stats.converged},"max_delta":${stats.maxDelta},""" +
-      s""""top_rank":$topRank,"wall_sec":${Fmt.fmt("%.1f", wall)}}""")
+      s""""top_rank":$topRank,"wall_sec":${Harness.fmt("%.1f", wall)}}""")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.{Bench, PipelineQueries, SparkEntry}
 
 /** Times a SELECTED subset of the gate queries at a fixture — the
@@ -25,13 +24,7 @@ object QuerySoak {
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     require(iters >= 1,
       s"SPARK_GRAFT_BENCH_ITERS must be >= 1, got $iters")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("WARN")
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       def once(): Double = {

@@ -146,17 +146,7 @@ object ScaleFixture {
     val skewPct = if (args.length >= 4) args(3).toInt else 0
     require(skewPct >= 0 && skewPct < 100, s"skewPct out of range: $skewPct")
     val giantDocs = if (args.length == 5) args(4).toLong else 0L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // pin UTC here, not only in build.sbt's forked-JVM flags: run
-      // outside sbt on a non-UTC host, the NTZ→LTZ cast in
-      // Tables.loadEvents would otherwise shift every event instant
-      // by the zone offset and PERSIST the shifted values
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("WARN")
 
     def t(n: String): DataFrame = Tables.load(spark, src, n)
     val custOff = off(t("customer"), "c_custkey")

@@ -12,6 +12,15 @@ class BenchFormatSpec extends AnyFunSuite {
     } finally java.util.Locale.setDefault(prev)
   }
 
+  test("the shared JSON escaper escapes quote, backslash and control chars") {
+    import graft.tools.Harness.json
+    assert(json("a\"b") == "\"a\\\"b\"")
+    assert(json("a\\b") == "\"a\\\\b\"")
+    assert(json("a\nb\rc\td") == "\"a\\nb\\rc\\td\"")
+    assert(json("a\u0001b") == "\"a\\u0001b\"")
+    assert(json("plain é") == "\"plain é\"")
+  }
+
   test("ref_drift reads each entry's first warm pass, not its retried median") {
     // q1 read 3x its reference on the first pass; the retry's extra
     // samples pulled its median back to 1.1x

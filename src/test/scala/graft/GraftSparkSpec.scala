@@ -55,17 +55,12 @@ object SparkTestBase {
 
 class RelQueriesSpec extends SparkTestBase {
   test("all declared queries run and return rows at sf0.001") {
-    RelQueries.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
+    RelQueries.entries.foreach { case Entry(name, build, _) =>
+      val df = build(spark, sf)
       val n = df.count()
       assert(n >= 0, s"$name returned negative count")
       withClue(s"query $name: ") { assert(n > 0) }
     }
-  }
-
-  test("every query has an oracle or is documented as rows-only") {
-    val missing = RelQueries.queries.keySet -- RelQueries.oracleSql.keySet
-    assert(missing.isEmpty, s"queries without oracle SQL: $missing")
   }
 
   test("q1_agg groups are the 3x2 returnflag/linestatus combinations") {
@@ -82,4 +77,72 @@ class RelQueriesSpec extends SparkTestBase {
   test("entry flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
+}
+
+/** The gate registry: each entry defined once, and the tools that
+  * select from it refuse what it does not hold.
+  */
+class RegistrySpec extends SparkTestBase {
+  private val lists = Seq(RelQueries.entries, DialectQueries.entries,
+    PipelineQueries.entries, DmlQueries.entries, StreamQueries.entries)
+  private val names = SparkEntry.entries.map(_.name)
+
+  test("entry names are unique across all five lists") {
+    val all = lists.flatten.map(_.name)
+    assert(all.size == SparkEntry.entries.size)
+    assert(all.diff(all.distinct).isEmpty, "names defined twice")
+  }
+
+  test("queries and oracleSql have the same key set") {
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size == names.size)
+    // a list declared above a builder it references captures null
+    val unset = SparkEntry.entries.filter(e =>
+      e.build == null || e.oracleSql == null || e.oracleSql.trim.isEmpty)
+    assert(unset.isEmpty, s"entries without builder or oracle: ${unset.map(_.name)}")
+  }
+
+  test("no entry name is a prefix of another, so a name selects exactly") {
+    val clashes = for (a <- names; b <- names if a != b && b.startsWith(a))
+      yield s"$a < $b"
+    assert(clashes.isEmpty, clashes.mkString(", "))
+    assert(Verify.select(Seq("q1_agg")).map(_.name) == Seq("q1_agg"))
+  }
+
+  test("every PlanAudit BNLJ allowlist key is a gate entry") {
+    val stale = graft.tools.PlanAudit.bnljAllowlist.keySet -- names
+    assert(stale.isEmpty, s"allowlisted but not in the gate: $stale")
+  }
+
+  test("Verify refuses an unknown selector before any work starts") {
+    val out = Files.createTempDirectory("graft_verify")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Verify.main(Array(sf, out.toString, "q1_agg,q1_agx"))
+      }
+      assert(e.getMessage.contains("q1_agx"))
+      assert(!e.getMessage.contains("q1_agg,"))
+      assert(!Files.exists(out.resolve("oracle_sql.json")))
+      intercept[IllegalArgumentException] {
+        Verify.main(Array(sf, out.toString, " , "))
+      }
+    } finally deleteTree(out)
+  }
+
+  test("Verify removes a stale dump when its entry fails") {
+    val out = Files.createTempDirectory("graft_verify")
+    try {
+      val stale = Files.createDirectories(out.resolve("q1_agg"))
+      Files.writeString(stale.resolve("part-0.parquet"), "from an earlier run")
+      val missingSf = out.resolve("no_such_sf").toString
+      val refused = Verify.dump(spark, missingSf, out.toString,
+        Verify.select(Seq("q1_agg")))
+      assert(refused.isEmpty)
+      assert(!Files.exists(stale), "stale dump left for check.py to PASS")
+    } finally deleteTree(out)
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (Files.exists(p))
+      Files.walk(p).sorted(Comparator.reverseOrder()).forEach(Files.delete(_))
 }

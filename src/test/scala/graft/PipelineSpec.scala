@@ -1291,31 +1291,6 @@ class PipelineSpec extends SparkTestBase {
     assert(Similarity.deriveBits(Long.MaxValue) == 24)
   }
 
-  test("join-back rerank variant returns the identical pair sets") {
-    val planted = embs.filter(col("vec_id") < 30).select(
-      (col("vec_id") + 1000000).as("vec_id"),
-      transform(col("embedding"), x => x * lit(1.05f)).as("embedding"))
-    val corpus = embs.unionByName(planted)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9))
-    val carry = Similarity.cosineNearDupPairs(corpus, "vec_id", "embedding",
-      minCosine = 0.99, bands = 4, bitsPerBand = 8, dims = 64)
-      .collect().map(key).toSet
-    val joinBack = Similarity.cosineNearDupPairs(corpus, "vec_id", "embedding",
-      minCosine = 0.99, bands = 4, bitsPerBand = 8, dims = 64,
-      carryPayload = false).collect().map(key).toSet
-    assert(carry == joinBack)
-    assert(carry.nonEmpty)
-    val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
-    def mkey(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9))
-    val mhCarry = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-      minEstJaccard = 0.3).collect().map(mkey).toSet
-    val mhJoinBack = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-      minEstJaccard = 0.3, carryPayload = false).collect().map(mkey).toSet
-    assert(mhCarry == mhJoinBack)
-  }
-
   test("semantic dedup keeps the best-quality member of each embedding cluster") {
     import graft.pipeline.Curation
     def scaled(off: Long, f: Float) = embs.filter(col("vec_id") < 10).select(
