@@ -8,9 +8,9 @@ import graft.pipeline.{Dedup, Similarity, TextAnalysis, Multimodal}
   * correctness gate. Every entry carries oracle SQL: each one runs
   * on a computation portable between Spark and DuckDB (md5, regexp
   * in the common RE2 subset, double-precision fold-order-identical
-  * arithmetic). The production hash families (xxhash64
-  * minhash/simhash, LSH bucketing) have no external twin; they are
-  * covered by ScalaTest and timed as Bench `extras`.
+  * arithmetic). The production hash family (xxhash64 minhash/
+  * simhash) has no external twin: it is covered by ScalaTest, and
+  * its production-path builders are timed as Bench `extras`.
   */
 object PipelineQueries {
 

@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-/** One gate entry: its name, the builder whose result the driver
+/** One gate entry: its name, the builder whose result `Verify`
   * dumps, and the equivalent ANSI SQL that DuckDB runs on the same
   * parquet tables for the hash compare.
   */

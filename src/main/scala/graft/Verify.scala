@@ -97,7 +97,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated entry names or name prefixes —
-    // local iteration aid (the driver always passes exactly two args)
+    // local iteration aid (the full gate run passes exactly two args)
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, Seq.empty[String])
       case Array(s, o, f) =>

@@ -31,8 +31,8 @@ object Harness {
 
   /** `s` as a JSON string literal. Quote, backslash and every control
     * character below U+0020 are escaped: a tab or newline in an error
-    * message or in builder-authored SQL would otherwise make the line
-    * invalid JSON, and the driver's `json.load` would zero the round.
+    * message or in entry-authored SQL would otherwise make the line
+    * invalid JSON, and a reader's `json.load` would reject all of it.
     */
   def json(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
