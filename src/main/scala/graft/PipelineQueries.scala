@@ -112,16 +112,30 @@ object PipelineQueries {
       (ot, lt)
     })
 
+  /** (doc_id, text) of the documents plus planted near-duplicates:
+    * copies of docs 0..49 with the first word replaced by "zzz" (high
+    * Jaccard at every document length) under ids 2,000,000 up. The
+    * oracles' `base` CTEs replay it.
+    */
+  private def plantedCorpus(s: SparkSession, dir: String): DataFrame = {
+    val d = docs(s, dir).select("doc_id", "text")
+    d.unionByName(d.filter(col("doc_id") < 50).select(
+      (col("doc_id") + 2000000).as("doc_id"),
+      concat(lit("zzz "), expr("substring(text, instr(text, ' ') + 1)"))
+        .as("text")))
+  }
+
+  /** [[plantedCorpus]] as the oracles' `base` CTE. */
+  private val plantedBaseCte: String =
+    """base AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 2000000, 'zzz ' || substr(text, strpos(text, ' ') + 1)
+      |  FROM documents WHERE doc_id < 50)""".stripMargin
+
   private def plantedMinhashPairs(s: SparkSession, dir: String): DataFrame =
     plantedPairsCache.computeIfAbsent((s, dir), { _ =>
-      val d = docs(s, dir).select("doc_id", "text")
-      // plant near-duplicates: copies with the first word replaced
-      // (high Jaccard at every document length)
-      val nearDup = d.filter(col("doc_id") < 50).select(
-        (col("doc_id") + 2000000).as("doc_id"),
-        concat(lit("zzz "), expr("substring(text, instr(text, ' ') + 1)"))
-          .as("text"))
-      Dedup.minhashNearDupPairs(d.unionByName(nearDup), "doc_id", "text",
+      Dedup.minhashNearDupPairs(plantedCorpus(s, dir), "doc_id", "text",
         shingleWidth = 3, numHashes = 32, bands = 8, minEstJaccard = 0.5,
         portable = true)
     })
@@ -137,16 +151,10 @@ object PipelineQueries {
     * number a production deployment actually sees. Same corpus, same
     * banding, same guard; only the hash family differs.
     */
-  private[graft] val dd2xProdMinhash: Q = (s, dir) => {
-    val d = docs(s, dir).select("doc_id", "text")
-    val nearDup = d.filter(col("doc_id") < 50).select(
-      (col("doc_id") + 2000000).as("doc_id"),
-      concat(lit("zzz "), expr("substring(text, instr(text, ' ') + 1)"))
-        .as("text"))
-    Dedup.minhashNearDupPairs(d.unionByName(nearDup), "doc_id", "text",
+  private[graft] val dd2xProdMinhash: Q = (s, dir) =>
+    Dedup.minhashNearDupPairs(plantedCorpus(s, dir), "doc_id", "text",
       shingleWidth = 3, numHashes = 32, bands = 8, minEstJaccard = 0.5,
       portable = false)
-  }
 
   /** Bench-only entries: timed by Bench under an `extras` JSON field
     * (excluded from the gate and from the headline total so round
@@ -254,11 +262,7 @@ object PipelineQueries {
   }
 
   val dd2Sql: String =
-    s"""WITH base AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 2000000, 'zzz ' || substr(text, strpos(text, ' ') + 1)
-      |  FROM documents WHERE doc_id < 50),
+    s"""WITH ${plantedBaseCte},
       |${minhashPairsCtes()}
       |SELECT id1, id2, CAST(m AS DOUBLE) / 32 AS est_jaccard
       |FROM agree WHERE CAST(m AS DOUBLE) / 32 >= 0.5
@@ -328,11 +332,7 @@ object PipelineQueries {
       .orderBy("id")
 
   val dd6Sql: String =
-    s"""WITH RECURSIVE base AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 2000000, 'zzz ' || substr(text, strpos(text, ' ') + 1)
-      |  FROM documents WHERE doc_id < 50),
+    s"""WITH RECURSIVE ${plantedBaseCte},
       |${minhashPairsCtes()},
       |pairs AS (
       |  SELECT id1, id2 FROM agree WHERE CAST(m AS DOUBLE) / 32 >= 0.5),
@@ -351,12 +351,7 @@ object PipelineQueries {
   // singletons keep themselves. The oracle reuses the recursive
   // closure and ranks members with a window.
   val dd8Keepers: Q = (s, dir) => {
-    val d = docs(s, dir).select("doc_id", "text")
-    val planted = d.filter(col("doc_id") < 50).select(
-      (col("doc_id") + 2000000).as("doc_id"),
-      concat(lit("zzz "), expr("substring(text, instr(text, ' ') + 1)"))
-        .as("text"))
-    val corpus = d.unionByName(planted)
+    val corpus = plantedCorpus(s, dir)
       .withColumn("quality", length(col("text")).cast("long"))
     pipeline.Curation.selectKeepers(corpus,
       plantedMinhashPairs(s, dir).select("id1", "id2"),
@@ -365,11 +360,7 @@ object PipelineQueries {
   }
 
   val dd8Sql: String =
-    s"""WITH RECURSIVE base AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 2000000, 'zzz ' || substr(text, strpos(text, ' ') + 1)
-      |  FROM documents WHERE doc_id < 50),
+    s"""WITH RECURSIVE ${plantedBaseCte},
       |${minhashPairsCtes()},
       |pairs AS (
       |  SELECT id1, id2 FROM agree WHERE CAST(m AS DOUBLE) / 32 >= 0.5),
@@ -2100,11 +2091,7 @@ object PipelineQueries {
       |deduped AS (
       |  SELECT g.doc_id, g.text, g.lang, g.source
       |  FROM gated g JOIN keep USING (doc_id)),
-      |base AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 2000000, 'zzz ' || substr(text, strpos(text, ' ') + 1)
-      |  FROM documents WHERE doc_id < 50),
+      |${plantedBaseCte},
       |${minhashPairsCtes()},
       |losers AS (
       |  SELECT DISTINCT id2 AS doc_id FROM agree
@@ -2396,11 +2383,7 @@ object PipelineQueries {
       |deduped AS (
       |  SELECT g.doc_id, g.text, g.source, g.n_words
       |  FROM gated g JOIN keep USING (doc_id)),
-      |base AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 2000000, 'zzz ' || substr(text, strpos(text, ' ') + 1)
-      |  FROM documents WHERE doc_id < 50),
+      |${plantedBaseCte},
       |${minhashPairsCtes()},
       |losers AS (
       |  SELECT DISTINCT id2 AS doc_id FROM agree
@@ -3250,7 +3233,7 @@ object PipelineQueries {
         |  WHERE length(word) >= 1 GROUP BY word),
         |s0 AS MATERIALIZED (
         |  SELECT word, freq,
-        |         regexp_replace(word, '(.)', '\1 ', 'g') || '</w>' AS seq
+        |         regexp_replace(word, '(?s)(.)', '\1 ', 'g') || '</w>' AS seq
         |  FROM v)""".stripMargin
     val steps = (1 to rounds).map { k =>
       s"""p$k AS MATERIALIZED (

@@ -431,7 +431,7 @@ final class ManagedEngine(
           withPred.filter(coalesce(cond, lit(false))))
       case Some(f) =>
         val scope = info.innerScope
-        val fromDf = LoweringAccess.lowerFromPublic(ctx, scope, f)
+        val fromDf = Lowering.lowerFromForDml(ctx, scope, f)
         // an explicit inner join (not crossJoin+filter) keeps the
         // WHERE's equi-predicates visible as the join condition, so a
         // pathological WHERE can never plan as a full cartesian;
@@ -494,10 +494,4 @@ final class ManagedEngine(
     catalog.overwrite(u.table, untouched.unionByName(updatedRows))
     ret
   }
-}
-
-/** Access shim for Lowering internals needed by DML. */
-object LoweringAccess {
-  def lowerFromPublic(ctx: Lowering.Ctx, scope: Analyzer.Scope,
-      from: From): DataFrame = Lowering.lowerFromForDml(ctx, scope, from)
 }

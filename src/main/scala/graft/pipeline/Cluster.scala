@@ -26,17 +26,16 @@ object Cluster {
     * round's single action: the old label rides along into the
     * aggregation, and the materializing `max(changed)` aggregate both
     * populates the round's cache and answers "did anything move" — no
-    * separate probe job. Lineage is truncated every `checkpointEvery`
-    * rounds (see [[Lineage]]).
+    * separate probe job. Lineage is truncated every
+    * [[Lineage.cadence]] rounds (see [[Lineage]]).
     *
     * Throws on non-convergence within `maxIters` — silently returning
     * partially-propagated labels would hand the caller wrong clusters.
     */
   def connectedComponents(pairs: DataFrame, id1: String = "id1",
-      id2: String = "id2", maxIters: Int = 20,
-      checkpointEvery: Int = 3): DataFrame = {
+      id2: String = "id2", maxIters: Int = 20): DataFrame = {
     val (labels, stats) = connectedComponentsWithStats(pairs, id1, id2,
-      maxIters, checkpointEvery)
+      maxIters)
     if (!stats.converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIters rounds — " +
         "labels are partial; raise maxIters")
@@ -50,7 +49,6 @@ object Cluster {
     */
   def connectedComponentsWithStats(pairs: DataFrame, id1: String = "id1",
       id2: String = "id2", maxIters: Int = 20,
-      checkpointEvery: Int = 3,
       onRound: (Int, Boolean) => Unit = (_, _) => ()): (DataFrame, CcStats) = {
     val edges = Lineage.truncate(pairs
       .select(col(id1).as("src"), col(id2).as("dst"))
@@ -95,7 +93,7 @@ object Cluster {
       toFree.foreach(_.unpersist(false))
       toFree = Some(next)
       labels =
-        if (!converged && (iter + 1) % checkpointEvery == 0) {
+        if (!converged && (iter + 1) % Lineage.cadence == 0) {
           // periodic lineage cut: the cached plans still nest one level
           // per round; a checkpoint resets plan depth
           val flat = Lineage.truncate(fresh)

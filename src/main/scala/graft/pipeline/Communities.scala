@@ -41,8 +41,8 @@ object Communities {
     * pair folds associatively, so the argmax needs no window and no
     * sort. Per-round shuffle volume is O(|E|) vote rows collapsing to
     * O(|V|) — never all-pairs, no driver-side loop over rows.
-    * Lineage is truncated every `checkpointEvery` rounds (see
-    * [[Lineage]]).
+    * Lineage is truncated every [[Lineage.cadence]] rounds (see
+    * [[Lineage.rounds]]).
     *
     * Runs a FIXED `iters` rounds (LPA has no monotone convergence
     * guarantee; production runs use a small fixed budget — labels
@@ -50,8 +50,7 @@ object Communities {
     * (node, community) with community = the surviving label.
     */
   def labelPropagation(pairs: DataFrame, id1: String = "id1",
-      id2: String = "id2", iters: Int = 4,
-      checkpointEvery: Int = 3): DataFrame = {
+      id2: String = "id2", iters: Int = 4): DataFrame = {
     require(iters >= 1, s"labelPropagation needs >= 1 round, got $iters")
     // symmetrized edge set materialized ONCE (r12 optimization): it
     // feeds three derivations (both arms of the self-loop union and
@@ -71,22 +70,20 @@ object Communities {
       .unionByName(sym.select(col("src")).distinct()
         .select(col("src"), col("src").as("dst")))
       .repartition(col("src")))
-    var labels = Lineage.truncate(
+    val labels0 = Lineage.truncate(
       sym.select(col("src").as("node")).distinct()
         .withColumn("lbl", col("node")))
-    for (i <- 1 to iters) {
+    val labels = Lineage.rounds(labels0, iters) { cur =>
       val votes = edges
-        .join(labels.withColumnRenamed("node", "src"), "src")
+        .join(cur.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), col("lbl"))
         .groupBy("node", "lbl").agg(count(lit(1)).as("c"))
       // argmax by (count DESC, label ASC) as ONE associative
       // struct-max: maximize (c, -lbl), then recover lbl. No window.
-      labels = votes
+      votes
         .groupBy("node")
         .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("w"))
         .select(col("node"), (-col("w.nl")).as("lbl"))
-      if (i % checkpointEvery == 0 && i < iters)
-        labels = Lineage.truncate(labels)
     }
     labels.select(col("node"), col("lbl").as("community"))
   }
@@ -111,18 +108,29 @@ object Communities {
     * window, no driver-side rows. The surviving edge frame shrinks
     * monotonically. The round function reads the live frame twice
     * (degree + filter), so lineage is truncated every
-    * `checkpointEvery` rounds to contain the plan doubling (the
-    * gr2 double-reference family; bounded at 2^checkpointEvery×
-    * between cuts). Convergence within the budget is the caller's
-    * contract — pass `rounds` >= the graph's peel depth and assert
-    * idempotence in tests (the spec does; real deployments log the
-    * last round's drop count).
+    * [[Lineage.cadence]] rounds to contain the plan doubling (the
+    * gr2 double-reference family; bounded at 2^cadence× between
+    * cuts; see [[Lineage.rounds]]). Convergence within the budget is
+    * the caller's contract — pass `rounds` >= the graph's peel depth
+    * and assert idempotence in tests (the spec does; real deployments
+    * log the last round's drop count).
     */
   def kCore(pairs: DataFrame, id1: String = "id1", id2: String = "id2",
-      k: Int = 3, rounds: Int = 12, checkpointEvery: Int = 3): DataFrame = {
+      k: Int = 3, rounds: Int = 12): DataFrame = {
     require(k >= 1, s"kCore needs k >= 1, got $k")
     require(rounds >= 1, s"kCore needs rounds >= 1, got $rounds")
-    var live = Lineage.truncate(pairs
+    Lineage.rounds(symmetrized(pairs, id1, id2), rounds)(peel(_, k))
+      .groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("core_deg"))
+  }
+
+  /** The peel input of [[kCore]] and [[kCoreProfile]]: both
+    * orientations of every non-self-loop pair, deduped, partitioned
+    * on `src` and lineage-truncated.
+    */
+  private def symmetrized(pairs: DataFrame, id1: String,
+      id2: String): DataFrame =
+    Lineage.truncate(pairs
       .select(col(id1).cast("long").as("src"), col(id2).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .unionByName(pairs.select(col(id2).cast("long").as("src"),
@@ -130,18 +138,17 @@ object Communities {
       .filter(col("src") =!= col("dst"))
       .distinct()
       .repartition(col("src")))
-    for (r <- 1 to rounds) {
-      val keep = live.groupBy("src").agg(count(lit(1)).as("__c"))
-        .filter(col("__c") >= k).select(col("src").as("__keep"))
-      live = live
-        .join(keep.withColumnRenamed("__keep", "src"), Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("__keep", "dst"), Seq("dst"), "left_semi")
-        .select("src", "dst")
-      if (r % checkpointEvery == 0 && r < rounds)
-        live = Lineage.truncate(live)
-    }
-    live.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("core_deg"))
+
+  /** One synchronous peel: keeps the edges both of whose endpoints
+    * have degree >= `k` in `live`.
+    */
+  private def peel(live: DataFrame, k: Int): DataFrame = {
+    val keep = live.groupBy("src").agg(count(lit(1)).as("__c"))
+      .filter(col("__c") >= k).select(col("src").as("__keep"))
+    live
+      .join(keep.withColumnRenamed("__keep", "src"), Seq("src"), "left_semi")
+      .join(keep.withColumnRenamed("__keep", "dst"), Seq("dst"), "left_semi")
+      .select("src", "dst")
   }
 
   /** The peel TRAJECTORY of [[kCore]]: one row per round (0 = the
@@ -160,9 +167,7 @@ object Communities {
     * flat read of `rounds + 1` one-row aggregates. Note this makes
     * construction EAGER: rounds+1 materialization jobs run before the
     * returned frame is acted on; where the round frames are stored
-    * follows the session policy in [[Lineage]]. (A `checkpointEvery`
-    * parameter existed through r12 but bounded nothing once every
-    * round truncates; it was removed rather than left as a dead knob.)
+    * follows the session policy in [[Lineage]].
     */
   def kCoreProfile(pairs: DataFrame, id1: String = "id1",
       id2: String = "id2", k: Int = 3, rounds: Int = 6): DataFrame = {
@@ -172,22 +177,10 @@ object Communities {
       live.agg(expr("count(DISTINCT src)").as("nodes"),
         expr("count(1) DIV 2").as("edges"))
         .select(lit(round).as("round"), col("nodes"), col("edges"))
-    var live = Lineage.truncate(pairs
-      .select(col(id1).cast("long").as("src"), col(id2).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .unionByName(pairs.select(col(id2).cast("long").as("src"),
-        col(id1).cast("long").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .repartition(col("src")))
+    var live = symmetrized(pairs, id1, id2)
     var out = stats(0, live)
     for (r <- 1 to rounds) {
-      val keep = live.groupBy("src").agg(count(lit(1)).as("__c"))
-        .filter(col("__c") >= k).select(col("src").as("__keep"))
-      live = Lineage.truncate(live
-        .join(keep.withColumnRenamed("__keep", "src"), Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("__keep", "dst"), Seq("dst"), "left_semi")
-        .select("src", "dst"))
+      live = Lineage.truncate(peel(live, k))
       out = out.unionByName(stats(r, live))
     }
     out

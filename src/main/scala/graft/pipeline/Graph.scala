@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
 object Graph {
 
   /** Outcome of a [[pageRankUntilStable]] run: rounds executed,
-    * whether the max per-node rank delta reached `tolGrid`, and the
-    * final round's max delta (grid units).
+    * whether the max per-node rank delta reached `tolGrid` (always
+    * true: a run that does not converge throws), and the final
+    * round's max delta (grid units).
     */
   final case class PrStats(rounds: Int, converged: Boolean,
       maxDelta: Long)
@@ -59,7 +60,7 @@ object Graph {
     * nodes. No all-pairs work, no driver-side loop over rows; the one
     * driver action besides checkpoints is the node count (a scalar
     * needed as a literal divisor). Lineage is truncated every
-    * `checkpointEvery` rounds (see [[Lineage]]).
+    * [[Lineage.cadence]] rounds (see [[Lineage.rounds]]).
     *
     * Returns (node, rank) with rank on the `scale` grid.
     */
@@ -67,18 +68,11 @@ object Graph {
       dstCol: String = "dst", iters: Int = 5,
       dampNum: Long = 85L, dampDen: Long = 100L,
       scale: Long = 1000000000000L,
-      checkpointEvery: Int = 3,
       redistributeDangling: Boolean = false): DataFrame = {
     require(iters >= 1, s"pageRank needs >= 1 iteration, got $iters")
     val st = setup(edges, srcCol, dstCol, dampNum, dampDen, scale,
       redistributeDangling)
-    var ranks = st.ranks0
-    for (i <- 1 to iters) {
-      ranks = st.round(ranks)
-      if (i % checkpointEvery == 0 && i < iters)
-        ranks = Lineage.truncate(ranks)
-    }
-    ranks
+    Lineage.rounds(st.ranks0, iters)(st.round)
   }
 
   /** Personalized (seed-teleport) PageRank: the damped walk restarts
@@ -101,18 +95,11 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       srcCol: String = "src", dstCol: String = "dst", iters: Int = 5,
       dampNum: Long = 85L, dampDen: Long = 100L,
-      scale: Long = 1000000000000L,
-      checkpointEvery: Int = 3): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1, s"personalizedPageRank needs >= 1 iteration, got $iters")
     val st = setup(edges, srcCol, dstCol, dampNum, dampDen, scale,
       redistributeDangling = false, seeds = Some(seeds))
-    var ranks = st.ranks0
-    for (i <- 1 to iters) {
-      ranks = st.round(ranks)
-      if (i % checkpointEvery == 0 && i < iters)
-        ranks = Lineage.truncate(ranks)
-    }
-    ranks
+    Lineage.rounds(st.ranks0, iters)(st.round)
   }
 
   /** [[pageRank]] iterated to a FIXPOINT instead of a fixed round
@@ -148,25 +135,6 @@ object Graph {
       dampNum: Long = 85L, dampDen: Long = 100L,
       scale: Long = 1000000000000L,
       onRound: (Int, Long) => Unit = (_, _) => ()): (DataFrame, PrStats) = {
-    val (ranks, stats) = pageRankWithStats(edges, srcCol, dstCol, tolGrid,
-      maxIters, dampNum, dampDen, scale, onRound)
-    if (!stats.converged) throw new IllegalStateException(
-      s"pageRankUntilStable did not reach tolGrid=$tolGrid in " +
-        s"$maxIters rounds (last max delta ${stats.maxDelta}) — raise " +
-        "maxIters or tolGrid")
-    (ranks, stats)
-  }
-
-  /** As [[pageRankUntilStable]] but returns `converged = false` in
-    * [[PrStats]] instead of throwing when `maxIters` rounds don't
-    * reach the tolerance — the caller inspects the outcome, same
-    * contract as [[Cluster.connectedComponentsWithStats]].
-    */
-  def pageRankWithStats(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", tolGrid: Long = 1000000L, maxIters: Int = 100,
-      dampNum: Long = 85L, dampDen: Long = 100L,
-      scale: Long = 1000000000000L,
-      onRound: (Int, Long) => Unit = (_, _) => ()): (DataFrame, PrStats) = {
     require(tolGrid >= 0, s"tolGrid must be >= 0, got $tolGrid")
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
     val st = setup(edges, srcCol, dstCol, dampNum, dampDen, scale)
@@ -190,7 +158,11 @@ object Graph {
       round += 1
       onRound(round, delta)
     }
-    (ranks, PrStats(round, converged = delta <= tolGrid, maxDelta = delta))
+    if (delta > tolGrid) throw new IllegalStateException(
+      s"pageRankUntilStable did not reach tolGrid=$tolGrid in " +
+        s"$maxIters rounds (last max delta $delta) — raise " +
+        "maxIters or tolGrid")
+    (ranks, PrStats(round, converged = true, maxDelta = delta))
   }
 
   /** Shared setup: deduped long-typed edges joined with out-degrees,

@@ -299,9 +299,9 @@ object Sampling {
     val norm = targets.values.sum
     val spark = df.sparkSession
     import spark.implicits._
-    val t = broadcast(targets.toSeq.sortBy(_._1)
+    val t = targets.toSeq.sortBy(_._1)
       .map { case (s, w) => (s, w / norm) }
-      .toDF(strataCol, "target_share"))
+      .toDF(strataCol, "target_share")
     val actual = df.groupBy(col(strataCol))
       .agg(sum(col(weightCol).cast("double")).as("actual_w"))
     // a stratum with NULL or non-positive total weight fails the
@@ -309,7 +309,9 @@ object Sampling {
     // all-NULL and zero/negative strata alike
     val unreachable = t.join(actual.filter(col("actual_w") > 0.0),
       Seq(strataCol), "left_anti")
-    val joined = actual.join(t, Seq(strataCol))
+    // t is broadcast only here, where it is the build side; Spark
+    // cannot build the left side of the left_anti join above
+    val joined = actual.join(broadcast(t), Seq(strataCol))
     val k = joined.agg(
       min(col("actual_w") / col("target_share")).as("__k"))
     // any target stratum with no positive corpus mass makes the

@@ -574,15 +574,17 @@ object TextAnalysis {
   /** Initial BPE symbol sequence of a word: space-joined characters
     * plus the Sennrich end-of-word marker ("low" → "l o w </w>").
     * Built with the java.util.regex replace that Spark's
-    * `regexp_replace(word, "(.)", "$1 ")` runs, so `.` takes a
-    * surrogate pair whole (an emoji is one symbol) and skips `\n`
-    * ("a\nb" → "a \nb </w>"). The marker never collides with a single
-    * character, and merged symbols are concatenations of space-free
-    * symbols, so token boundaries in the space-joined form are
-    * unambiguous.
+    * `regexp_replace(word, "(?s)(.)", "$1 ")` runs, so `.` takes a
+    * surrogate pair whole (an emoji is one symbol). `(?s)` makes every
+    * code point a symbol: without it Java's `.` skips `\n`, `\r`,
+    * U+0085, U+2028 and U+2029 while RE2's (DuckDB's) skips only
+    * `\n`, and a word holding one of them splits differently in the
+    * two engines. The marker never collides with a single character,
+    * and merged symbols are concatenations of space-free symbols, so
+    * token boundaries in the space-joined form are unambiguous.
     */
   private def bpeSeq0(word: String): String =
-    word.replaceAll("(.)", "$1 ") + "</w>"
+    word.replaceAll("(?s)(.)", "$1 ") + "</w>"
 
   /** Spark's (and DuckDB's) string order: unsigned UTF-8 bytes, which
     * is code-point order. `String.compareTo` orders UTF-16 code units

@@ -14,11 +14,16 @@ import graft.{Entry, SparkEntry}
   *     the audit — it means a join lost its equi-key.
   *
   * Prints one JSON line: {"pass":bool,"cartesian":[...],
-  * "unexpected_bnlj":[...],"allowlisted_bnlj":[...],"errors":{...}}.
-  * Exit code 1 on failure. Building a plan does not run the query,
-  * but entries whose CONSTRUCTION runs bounded driver actions
-  * (centroid training, budget probes) execute those — the sweep takes
-  * a couple of minutes at sf0.01, not hours.
+  * "unexpected_bnlj":[...],"allowlisted_bnlj":[...],
+  * "unused_allowlist":[...],"bad_types":[...],"errors":{...}}.
+  * `unused_allowlist` names the allowlist keys whose entry planned no
+  * BNLJ in this sweep: a stale key would let a BNLJ that later
+  * appears there pass unnoticed, so it is reported (it does not fail
+  * the audit, since a plan may differ by scale). Exit code 1 on
+  * failure. Building a plan does not run the query, but entries
+  * whose CONSTRUCTION runs bounded driver actions (centroid training,
+  * budget probes) execute those — the sweep takes a couple of minutes
+  * at sf0.01, not hours.
   */
 object PlanAudit {
 
@@ -33,7 +38,6 @@ object PlanAudit {
   val bnljAllowlist: Map[String, String] = Map(
     // one-row broadcasts
     "gr2_pagerank_dangling" -> "one-row dangling-mass broadcast per round",
-    "gr4_hits" -> "one-row per-step max broadcast (ppm normalization)",
     "hk1_hot_keys" -> "one-row corpus-total broadcast for the share column",
     "pf1a_numeric_profile_approx" ->
       "one-row sketch frame joined for in-plan rank attestation",
@@ -104,8 +108,10 @@ object PlanAudit {
     val cart = cartesian.result()
     val unexp = unexpected.result()
     val badT = badTypes.result()
+    val allowed = allowlisted.result()
+    val unused = bnljAllowlist.keys.toList.filterNot(allowed.contains).sorted
     val pass = cart.isEmpty && unexp.isEmpty && badT.isEmpty && errors.isEmpty
-    println(s"""{"pass":$pass,"cartesian":${arr(cart)},"unexpected_bnlj":${arr(unexp)},"allowlisted_bnlj":${arr(allowlisted.result())},"bad_types":${arr(badT)},"errors":$errObj}""")
+    println(s"""{"pass":$pass,"cartesian":${arr(cart)},"unexpected_bnlj":${arr(unexp)},"allowlisted_bnlj":${arr(allowed)},"unused_allowlist":${arr(unused)},"bad_types":${arr(badT)},"errors":$errObj}""")
     spark.stop()
     if (!pass) sys.exit(1)
   }

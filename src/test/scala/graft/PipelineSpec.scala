@@ -524,15 +524,16 @@ class PipelineSpec extends SparkTestBase {
 
   test("connected components: reliable-checkpoint path matches default") {
     import spark.implicits._
-    import graft.pipeline.Cluster
+    import graft.pipeline.{Cluster, Lineage}
     // long enough chain that the periodic truncate actually fires
-    // (checkpointEvery = 2 over several rounds) plus an island
+    // (more rounds than the cadence) plus an island
     val pairs = ((1L to 40L).sliding(2).map(w => (w.head, w.last)).toSeq
       :+ (100L, 101L)).toDF("id1", "id2")
     val (local, reliable) = underBothLineagePolicies {
-      val (labels, stats) = Cluster.connectedComponentsWithStats(pairs,
-        checkpointEvery = 2)
+      val (labels, stats) = Cluster.connectedComponentsWithStats(pairs)
       assert(stats.converged)
+      assert(stats.rounds > Lineage.cadence,
+        s"${stats.rounds} rounds: no periodic truncation fired")
       // the returned frame's lineage is cut: its plan bottoms out in
       // the checkpointed RDD, not the iterative join tree
       val leaves = labels.queryExecution.optimizedPlan.collectLeaves()
@@ -543,6 +544,33 @@ class PipelineSpec extends SparkTestBase {
     assert(reliable == local)
     assert(local.filter(_._1 <= 40L).values.toSet == Set(1L))
     assert(local(100L) == 100L && local(101L) == 100L)
+  }
+
+  test("Lineage.rounds truncates after every cadence-th round but the last") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import graft.pipeline.Lineage
+    val step = (df: DataFrame) => df.select((col("id") + 1).as("id"))
+    def cuts(p: LogicalPlan) =
+      p.collectLeaves().count(_.getClass.getSimpleName == "LogicalRDD")
+    def ids(df: DataFrame) = df.collect().map(_.getLong(0)).sorted.toSeq
+    // up to the cadence the result stays one lazy plan over the input
+    for (n <- 1 to Lineage.cadence) {
+      val out = Lineage.rounds(spark.range(5).toDF(), n)(step)
+      assert(cuts(out.queryExecution.analyzed) == 0, s"n=$n")
+      assert(ids(out) == (n.toLong until n + 5L), s"n=$n")
+    }
+    // one round past it: exactly one cut, after round `cadence`, with
+    // the last round lazy on top of it
+    val n = Lineage.cadence + 1
+    val (local, reliable) = underBothLineagePolicies {
+      val out = Lineage.rounds(spark.range(5).toDF(), n)(step)
+      val plan = out.queryExecution.analyzed
+      assert(cuts(plan) == 1, plan.treeString)
+      assert(plan.collect { case p: Project => p }.size == 1, plan.treeString)
+      ids(out)
+    }
+    assert(local == (n.toLong until n + 5L) && reliable == local)
   }
 
   test("stratified sample is deterministic and tracks the rates") {

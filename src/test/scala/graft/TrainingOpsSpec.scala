@@ -37,7 +37,7 @@ class TrainingOpsSpec extends SparkTestBase {
       .filter(length(col("word")) >= 1)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .withColumn("seq",
-        concat(regexp_replace(col("word"), "(.)", "$1 "), lit("</w>")))
+        concat(regexp_replace(col("word"), "(?s)(.)", "$1 "), lit("</w>")))
       .localCheckpoint()
     val merges = Seq.newBuilder[Merge]
     var r = 1
@@ -105,15 +105,17 @@ class TrainingOpsSpec extends SparkTestBase {
 
   test("bpeLearn and bpeEncode match the Spark-expression reference") {
     // the adversarial corpora are where a driver loop written with
-    // JVM string rules drifts from Spark's: `.` skips "\n" (and a
-    // padded "\na" symbol must survive the space-only trim), `.`
-    // takes a surrogate pair whole, and ties break in code-point
-    // order, where U+FF41 sorts before an emoji (UTF-16 puts it after)
+    // JVM string rules drifts from Spark's: a "\n" symbol at a
+    // sequence edge must survive the space-only trim, line separators
+    // are symbols like any other character, `.` takes a surrogate
+    // pair whole, and ties break in code-point order, where U+FF41
+    // sorts before an emoji (UTF-16 puts it after)
     val cases = Seq(
       ("documents", Tables.load(spark, sf, "documents")
         .select(col("source"), col("text")), 8),
       ("newline", docsOf("a\nb a\nb a\nb ab \na \na x\n")
         .select(lit("s").as("source"), col("text")), 4),
+      ("line separators", lineSeparatorDocs, 6),
       ("emoji", docsOf("\ud83d\ude00\ud83d\ude00 \ud83d\ude00b",
         "\ud83d\ude00\ud83d\ude00 b\ud83d\ude00")
         .select(col("doc_id").cast("string").as("source"), col("text")), 4),
@@ -128,6 +130,54 @@ class TrainingOpsSpec extends SparkTestBase {
         assert(encoded(df, "source", "text", rounds) ===
           referenceEncode(df, "source", "text", refVocab))
       }
+    }
+  }
+
+  /** Words holding the characters Java's `.` skips but RE2's does
+    * not (`\r`, U+0085, U+2028, U+2029), plus `\n`, which both skip
+    * without `(?s)`.
+    */
+  private def lineSeparatorDocs: DataFrame =
+    docsOf("a\rb a\rb a\rb \ra a\u0085b a\u0085b",
+      "x\u2028y x\u2028y x\u2029y a\nb ab\r \u2029\u2029")
+      .withColumn("source", col("doc_id").cast("string"))
+
+  test("bp2/bp3 match their DuckDB oracles on line-separator words") {
+    import scala.sys.process._
+    val hasDuckdb = scala.util.Try(
+      Seq("python3", "-c", "import duckdb").! == 0).getOrElse(false)
+    assume(hasDuckdb, "python3 with the duckdb package is not installed")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_bpe_oracle")
+    try {
+      val dir = tmp.toString
+      lineSeparatorDocs.coalesce(1).write.parquet(Tables.path(dir, "documents"))
+      def rows(df: DataFrame): Seq[String] = {
+        val cols = df.columns.sorted.toIndexedSeq
+        df.select(cols.map(col): _*).collect()
+          .map(_.toSeq.map(String.valueOf).mkString("\u001f")).toSeq.sorted
+      }
+      for (name <- Seq("bp2_bpe_learn", "bp3_bpe_encode")) {
+        val sqlFile = tmp.resolve(s"$name.sql")
+        java.nio.file.Files.writeString(sqlFile, SparkEntry.oracleSql(name))
+        val out = tmp.resolve(s"$name.parquet").toString
+        val script =
+          """import sys, duckdb
+            |docs, sql, out = sys.argv[1:4]
+            |c = duckdb.connect()
+            |c.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}/*.parquet')")
+            |c.execute(f"COPY ({open(sql).read()}) TO '{out}' (FORMAT PARQUET)")
+            |""".stripMargin
+        val rc = Seq("python3", "-c", script, Tables.path(dir, "documents"),
+          sqlFile.toString, out).!
+        assert(rc == 0, s"$name: DuckDB exited with $rc")
+        val engine = rows(SparkEntry.queries(name)(spark, dir))
+        assert(engine.nonEmpty, name)
+        assert(engine === rows(spark.read.parquet(out)), name)
+      }
+    } finally {
+      java.nio.file.Files.walk(tmp)
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(java.nio.file.Files.delete(_))
     }
   }
 
