@@ -1,13 +1,23 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog of the driver-generated parquet test tables (TESTDATA.md).
   *
   * The reference declares its table schemas up-front in an `Env`
-  * (reference: sqlpp.ml:87-103); here the parquet footer is the schema
-  * of record and we register each table as a temp view so both the
-  * DataFrame lowering and `spark.sql` can address them by name.
+  * (reference: sqlpp.ml:87-103), so preparing a query touches no data.
+  * Here the parquet footer is the schema of record: [[footerSchema]]
+  * reads it on the driver and the table is opened with that schema
+  * given, so a load runs no Spark job (Spark's own inference runs one
+  * per read). The schema is the file's physical one, not the DDL's
+  * (`Catalog.ddl`): INT32 columns stay INT, undeclared columns stay,
+  * and `events.ts` keeps the shape [[normalizeTs]] dispatches on.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -18,7 +28,36 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, sfDir)
-    else spark.read.parquet(path(sfDir, name))
+    else read(spark, path(sfDir, name))
+
+  private def read(spark: SparkSession, p: String): DataFrame =
+    spark.read.schema(footerSchema(spark, p)).parquet(p)
+
+  /** The Spark schema of a parquet file, or of a directory's first data
+    * file by name (`_*` and `.*` skipped, as Spark's file index skips
+    * them), read from its footer on the driver with no Spark job. It
+    * is the schema `spark.read.parquet(p)` infers: the same converter
+    * under the session's conf (so `nanosAsLong` must be set before the
+    * call), and the `org.apache.spark.sql.parquet.row.metadata` schema
+    * that Spark-written files carry wins over the converted one.
+    */
+  def footerSchema(spark: SparkSession, p: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(p)
+    val fs = path.getFileSystem(conf)
+    val file =
+      if (!fs.getFileStatus(path).isDirectory) path
+      else fs.listStatus(path).iterator.map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .minByOption(_.getName)
+        .getOrElse(throw new IllegalArgumentException(
+          s"no parquet data file under $p"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally reader.close()
+  }
 
   /** The driver's events table has shipped `ts` in three physical
     * shapes across fixture generations, all normalized here to ONE
@@ -40,7 +79,7 @@ object Tables {
     */
   def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(path(sfDir, "events")))
+    normalizeTs(read(spark, path(sfDir, "events")))
   }
 
   /** The vintage dispatch itself, shared with the streaming source
@@ -57,11 +96,5 @@ object Tables {
         raw.withColumn("ts",
           org.apache.spark.sql.functions.col("ts").cast("timestamp"))
       case _ => raw
-    }
-
-  /** Register every test table as a temp view named after itself. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach { n =>
-      load(spark, sfDir, n).createOrReplaceTempView(n)
     }
 }

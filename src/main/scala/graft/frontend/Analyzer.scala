@@ -44,8 +44,6 @@ object Analyzer {
       val isOpen: Boolean,
       var groupBy: Option[List[Expr]]) {
 
-    def fieldsSeq: Seq[Field] = fields.values.toSeq
-
     /** Deep copy (reference scope.ml:66-87 `fresh`). */
     def copyFresh: Scope = {
       val fs = mutable.LinkedHashMap.empty[String, Field]

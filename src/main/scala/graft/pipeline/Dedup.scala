@@ -297,16 +297,6 @@ object Dedup {
     }
   }
 
-  /** LSH banding: split the signature into `bands` bands of
-    * `numHashes / bands` rows, hash each band → (id, band, bucket).
-    */
-  def lshBuckets(sig: DataFrame, idCol: String, numHashes: Int,
-      bands: Int, portable: Boolean = false): DataFrame = {
-    sig.select(col(idCol),
-        explode(bandStructs(numHashes, bands, portable)).as("bb"))
-      .select(col(idCol), col("bb.band"), col("bb.bucket"))
-  }
-
   /** The per-band (band, bucket) structs over signature columns
     * mh_0..mh_{n-1}. Portable buckets join the band's values as a
     * string (SQL `string_agg` reproduces it); the default hashes them
@@ -537,6 +527,17 @@ object Dedup {
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
+  /** The 4×16-bit banding of a simhash signature frame (one row per
+    * (id, band, bucket)).
+    */
+  private def simhashBanded(sig: DataFrame, idCol: String): DataFrame =
+    sig.select(col(idCol), col("simhash"),
+      explode(array((0 until 4).map(b =>
+        struct(lit(b).as("band"),
+          shiftrightunsigned(col("simhash"), b * 16)
+            .bitwiseAND(lit(0xFFFFL)).as("bucket"))): _*)).as("bb"))
+      .select(col(idCol), col("simhash"), col("bb.band"), col("bb.bucket"))
+
   /** SimHash near-dup pairs among documents whose signatures fall in
     * the same bucket on at least one of four 16-bit bands (the
     * standard rotate-and-block scheme: a pair within Hamming distance
@@ -549,30 +550,6 @@ object Dedup {
     * yield B² candidate rows. Exact duplicates should go through
     * exactDedup first; such a hot bucket is all recall-noise.
     */
-  /** The 4×16-bit banding of a simhash signature frame (one row per
-    * (id, band, bucket)); shared by the pair miner and the hot-bucket
-    * audit so both always see identical bucketing.
-    */
-  private def simhashBanded(sig: DataFrame, idCol: String): DataFrame =
-    sig.select(col(idCol), col("simhash"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          shiftrightunsigned(col("simhash"), b * 16)
-            .bitwiseAND(lit(0xFFFFL)).as("bucket"))): _*)).as("bb"))
-      .select(col(idCol), col("simhash"), col("bb.band"), col("bb.bucket"))
-
-  /** The buckets simhashNearDupPairs would silently drop at this
-    * `maxBucketSize`, with their member counts — run this alongside a
-    * dedup pass to make the guard's recall loss visible (a huge count
-    * here means the corpus needs exactDedup first, not a bigger
-    * bucket cap).
-    */
-  def simhashHotBuckets(df: DataFrame, idCol: String, textCol: String,
-      maxBucketSize: Int = 200): DataFrame =
-    simhashBanded(simhash(df, idCol, textCol), idCol)
-      .groupBy("band", "bucket").count()
-      .filter(col("count") > maxBucketSize)
-
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucketSize: Int = 200): DataFrame = {
     val sig = simhash(df, idCol, textCol).cache()

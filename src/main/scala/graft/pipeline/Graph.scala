@@ -12,13 +12,11 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Outcome of a [[pageRankUntilStable]] run: rounds executed,
-    * whether the max per-node rank delta reached `tolGrid` (always
-    * true: a run that does not converge throws), and the final
-    * round's max delta (grid units).
+  /** Outcome of a [[pageRankUntilStable]] run: rounds executed and
+    * the final round's max per-node rank delta (grid units, at most
+    * `tolGrid`: a run that does not converge throws).
     */
-  final case class PrStats(rounds: Int, converged: Boolean,
-      maxDelta: Long)
+  final case class PrStats(rounds: Int, maxDelta: Long)
 
   /** Damped PageRank on an exact integer grid.
     *
@@ -162,7 +160,7 @@ object Graph {
       s"pageRankUntilStable did not reach tolGrid=$tolGrid in " +
         s"$maxIters rounds (last max delta $delta) — raise " +
         "maxIters or tolGrid")
-    (ranks, PrStats(round, converged = true, maxDelta = delta))
+    (ranks, PrStats(round, maxDelta = delta))
   }
 
   /** Shared setup: deduped long-typed edges joined with out-degrees,

@@ -485,11 +485,13 @@ object TextAnalysis {
     * bounded, millions of rows regardless of corpus token volume.
     * This is exactly why production BPE trainers operate on word
     * count tables, and the top-k is a TakeOrdered heap, not a sort.
+    * Like [[bpeVocab]], it reads the scan's own partitions: no
+    * [[Dedup.spread]] shuffle of raw text ahead of that partial agg.
     */
   def bpePairCounts(df: DataFrame, textCol: String,
       topK: Int = 50): DataFrame = {
     require(topK >= 1, s"bpePairCounts needs topK >= 1, got $topK")
-    val vocab = Dedup.spread(df)
+    val vocab = df
       .select(explode(split(col(textCol), " +")).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
@@ -703,11 +705,12 @@ object TextAnalysis {
     * words). Scoring is one (source, word) partial agg that joins the
     * final per-word token counts back, so each distinct word is
     * tokenized once and no document text is re-scanned per round.
+    * That agg reads the scan's own partitions, as [[bpeVocab]] does.
     */
   def bpeEncode(df: DataFrame, srcCol: String, textCol: String,
       rounds: Int = 8): DataFrame = {
     val st = bpeState(df, textCol, rounds)
-    val srcWords = Dedup.spread(df)
+    val srcWords = df
       .select(col(srcCol), explode(split(col(textCol), " +")).as("word"))
       .filter(length(col("word")) >= 1)
       .groupBy(col(srcCol), col("word"))

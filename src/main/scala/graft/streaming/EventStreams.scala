@@ -422,11 +422,14 @@ object EventStreams {
   }
 
   /** File-based streaming source over an events parquet directory —
-    * the production shape: readStream → transform → writeStream.
+    * the production shape: readStream → transform → writeStream. The
+    * schema comes from the first file's footer on the driver
+    * ([[graft.Tables.footerSchema]]), so starting the stream runs no
+    * schema-inference job.
     */
   def streamFromDir(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
-      .schema(spark.read.parquet(dir).schema)
+      .schema(graft.Tables.footerSchema(spark, dir))
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
 

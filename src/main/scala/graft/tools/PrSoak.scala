@@ -12,7 +12,7 @@ import graft.pipeline.Graph
   * per-round cost at fixture scale.
   *
   * Prints ONE JSON line:
-  * {"n_nodes":N,"rounds":N,"converged":b,"max_delta":N,
+  * {"n_nodes":N,"rounds":N,"max_delta":N,
   *  "top_rank":N,"wall_sec":S}
   *
   * Usage: runMain graft.tools.PrSoak <sfDir> [tolGrid] [maxIters]
@@ -49,7 +49,7 @@ object PrSoak {
     val topRank = ranks.agg(max("rank")).head().getLong(0)
     val wall = (System.nanoTime() - t0) / 1e9
     println(s"""{"n_nodes":$nNodes,"rounds":${stats.rounds},""" +
-      s""""converged":${stats.converged},"max_delta":${stats.maxDelta},""" +
+      s""""max_delta":${stats.maxDelta},""" +
       s""""top_rank":$topRank,"wall_sec":${Harness.fmt("%.1f", wall)}}""")
     spark.stop()
   }

@@ -126,7 +126,7 @@ class GraphSnapshotSpec extends SparkTestBase {
     import spark.implicits._
     val (df, stats) = Graph.pageRankUntilStable(
       Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"), tolGrid = 0L)
-    assert(stats == Graph.PrStats(1, converged = true, maxDelta = 0L))
+    assert(stats == Graph.PrStats(1, maxDelta = 0L))
     assert(df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 500000000000L, 2L -> 500000000000L))
   }
@@ -137,7 +137,7 @@ class GraphSnapshotSpec extends SparkTestBase {
     val edges = (for { a <- 1L to 4L; b <- 1L to 4L if a != b }
       yield (a, b)).toDF("src", "dst")
     val (df, stats) = Graph.pageRankUntilStable(edges, tolGrid = 0L)
-    assert(stats == Graph.PrStats(2, converged = true, maxDelta = 0L))
+    assert(stats == Graph.PrStats(2, maxDelta = 0L))
     val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == (1L to 4L).map(_ -> 249999999999L).toMap)
     val fixed = Graph.pageRank(edges, iters = stats.rounds)
@@ -166,7 +166,7 @@ class GraphSnapshotSpec extends SparkTestBase {
       onRound = { (_, _) =>
         val now = System.nanoTime(); walls += now - last; last = now
       })
-    assert(stats.converged && stats.rounds >= 35,
+    assert(stats.maxDelta <= 1000000L && stats.rounds >= 35,
       s"graph converged too fast (${stats.rounds} rounds) to exercise deep iteration")
     // late rounds must not dwarf early rounds (pre-fix: 100×+)
     val early = walls.slice(2, 10).sorted.apply(4)
