@@ -491,8 +491,7 @@ object TextAnalysis {
   def bpePairCounts(df: DataFrame, textCol: String,
       topK: Int = 50): DataFrame = {
     require(topK >= 1, s"bpePairCounts needs topK >= 1, got $topK")
-    val vocab = df
-      .select(explode(split(col(textCol), " +")).as("word"))
+    val vocab = df.select(explode(split(col(textCol), " +")).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
     val wordPairs = vocab
@@ -710,8 +709,8 @@ object TextAnalysis {
   def bpeEncode(df: DataFrame, srcCol: String, textCol: String,
       rounds: Int = 8): DataFrame = {
     val st = bpeState(df, textCol, rounds)
-    val srcWords = df
-      .select(col(srcCol), explode(split(col(textCol), " +")).as("word"))
+    val srcWords = df.select(col(srcCol),
+        explode(split(col(textCol), " +")).as("word"))
       .filter(length(col("word")) >= 1)
       .groupBy(col(srcCol), col("word"))
       .agg(count(lit(1)).as("n_occ"))

@@ -266,33 +266,46 @@ class EngineSpec extends SparkTestBase {
   test("fold streams a large typed result partition-at-a-time") {
     import spark.implicits._
     // the reference's core runtime contract is a row-at-a-time fold
-    // that never materializes the result (sqlpp.ml:332); the same
-    // ~60k-row multi-partition result CliSpec streams through the CLI
-    val big = Catalog.engine(spark, "/root/testdata/sf0.01")
-    val want = Tables.load(spark, "/root/testdata/sf0.01", "lineitem")
-      .selectExpr("count(*)", "sum(l_linenumber)").collect()(0)
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
+    // that never materializes the result (sqlpp.ml:332). The fixture's
+    // lineitem is one row group, so one partition; a 4-file copy of it
+    // gives the ~60k-row result 4 partitions to stream.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_fold")
     try {
-      val (n, s) = big.fold[(Long, Int), (Long, Long)](
-        "select l_orderkey, l_linenumber from lineitem")((0L, 0L)) {
-        case ((c, acc), (_, ln)) => (c + 1, acc + ln)
+      val dir = tmp.toString
+      Tables.load(spark, "/root/testdata/sf0.01", "lineitem")
+        .repartition(4).write.parquet(Tables.path(dir, "lineitem"))
+      val big = Catalog.engine(spark, dir)
+      val want = Tables.load(spark, dir, "lineitem")
+        .selectExpr("count(*)", "sum(l_linenumber)").collect()(0)
+      val src = "select l_orderkey, l_linenumber from lineitem"
+      val parts = big.sql(src).rdd.getNumPartitions
+      assert(parts >= 2, s"the result has $parts partition(s)")
+      @volatile var jobs = 0
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs += 1
       }
-      assert(n == want.getLong(0))
-      assert(s == want.getLong(1))
-      // toLocalIterator runs ONE JOB PER PARTITION as the fold
-      // consumes — peak driver memory is a single partition. A
-      // collect would be one job over all partitions. The listener
-      // bus is async: poll until the per-partition jobs surface.
-      val deadline = System.currentTimeMillis + 3000
-      while (jobs < 2 && System.currentTimeMillis < deadline)
-        Thread.sleep(50)
-      assert(jobs >= 2, s"fold ran $jobs job(s) — looks like a collect")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val (n, s) = big.fold[(Long, Int), (Long, Long)](src)((0L, 0L)) {
+          case ((c, acc), (_, ln)) => (c + 1, acc + ln)
+        }
+        assert(n == want.getLong(0))
+        assert(s == want.getLong(1))
+        // toLocalIterator runs ONE JOB PER PARTITION as the fold
+        // consumes — peak driver memory is a single partition. A
+        // collect would be one job over all partitions. The listener
+        // bus is async: poll until the per-partition jobs surface.
+        val deadline = System.currentTimeMillis + 3000
+        while (jobs < 2 && System.currentTimeMillis < deadline)
+          Thread.sleep(50)
+        assert(jobs >= 2, s"fold ran $jobs job(s) — looks like a collect")
+      } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      java.nio.file.Files.walk(tmp)
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(java.nio.file.Files.delete(_))
+    }
   }
 }

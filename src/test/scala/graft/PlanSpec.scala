@@ -760,9 +760,9 @@ class PlanSpec extends SparkTestBase {
   test("building bp2_bpe_learn runs at most 3 Spark jobs") {
     // the vocabulary aggregation's stages under AQE (the schema comes
     // from the parquet footer, with no job); the merge rounds
-    // themselves launch no job. Jobs are
-    // counted by job group, and a marker job run last in the group
-    // proves the (asynchronous) listener bus has delivered them all.
+    // themselves launch no job. Jobs are counted by job group, and a
+    // marker job run last in the group proves the (asynchronous)
+    // listener bus has delivered them all.
     val sc = spark.sparkContext
     val group = "bp2-construct-jobs"
     @volatile var jobs = 0
