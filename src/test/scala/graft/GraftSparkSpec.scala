@@ -37,6 +37,44 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       Files.walk(dir).sorted(Comparator.reverseOrder()).forEach(Files.delete(_))
     }
   }
+
+  /** The number of Spark jobs `body` starts on this thread, counted by
+    * job group; a marker job run last in the group proves the
+    * (asynchronous) listener bus has delivered them all.
+    */
+  def jobsIn(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = "graft-test-jobs"
+    @volatile var jobs = 0
+    @volatile var markerSeen = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (props.exists(_.getProperty("graft.test.marker") != null))
+            markerSeen = true
+          else jobs += 1
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted by a spec")
+      body
+      sc.setLocalProperty("graft.test.marker", "1")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis + 10000
+      while (!markerSeen && System.currentTimeMillis < deadline)
+        Thread.sleep(20)
+      assert(markerSeen, "marker job never reached the listener")
+      jobs
+    } finally {
+      sc.setLocalProperty("graft.test.marker", null)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkTestBase {

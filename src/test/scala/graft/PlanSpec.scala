@@ -760,39 +760,8 @@ class PlanSpec extends SparkTestBase {
   test("building bp2_bpe_learn runs at most 3 Spark jobs") {
     // the vocabulary aggregation's stages under AQE (the schema comes
     // from the parquet footer, with no job); the merge rounds
-    // themselves launch no job. Jobs are counted by job group, and a
-    // marker job run last in the group proves the (asynchronous)
-    // listener bus has delivered them all.
-    val sc = spark.sparkContext
-    val group = "bp2-construct-jobs"
-    @volatile var jobs = 0
-    @volatile var markerSeen = false
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val props = Option(js.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
-          if (props.exists(_.getProperty("graft.test.marker") != null))
-            markerSeen = true
-          else jobs += 1
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "bp2 construction")
-      SparkEntry.queries("bp2_bpe_learn")(spark, sf)
-      sc.setLocalProperty("graft.test.marker", "1")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis + 10000
-      while (!markerSeen && System.currentTimeMillis < deadline)
-        Thread.sleep(20)
-      assert(markerSeen, "marker job never reached the listener")
-      assert(jobs >= 1 && jobs <= 3, s"bp2 construction ran $jobs jobs")
-    } finally {
-      sc.setLocalProperty("graft.test.marker", null)
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    // themselves launch no job
+    val jobs = jobsIn(SparkEntry.queries("bp2_bpe_learn")(spark, sf))
+    assert(jobs >= 1 && jobs <= 3, s"bp2 construction ran $jobs jobs")
   }
 }

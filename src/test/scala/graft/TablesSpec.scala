@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import java.util.Comparator
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,43 +13,6 @@ import org.apache.spark.sql.types._
   */
 class TablesSpec extends SparkTestBase {
   private val sf01 = "/root/testdata/sf0.01"
-
-  /** Spark jobs `body` starts, counted by job group; a marker job run
-    * last in the group proves the (asynchronous) listener bus has
-    * delivered them all, as PlanSpec's bp2 job count does.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "tables-load-jobs"
-    @volatile var jobs = 0
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val props = Option(js.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
-          if (props.exists(_.getProperty("graft.test.marker") != null))
-            markerSeen = true
-          else jobs += 1
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "Tables.load")
-      body
-      sc.setLocalProperty("graft.test.marker", "1")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis + 10000
-      while (!markerSeen && System.currentTimeMillis < deadline)
-        Thread.sleep(20)
-      assert(markerSeen, "marker job never reached the listener")
-      jobs
-    } finally {
-      sc.setLocalProperty("graft.test.marker", null)
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** The table as Spark's schema inference reads it (`loadEvents`
     * sets `nanosAsLong` before its read; so does this). */
@@ -85,7 +47,7 @@ class TablesSpec extends SparkTestBase {
   }
 
   test("Tables.load runs no Spark job") {
-    val n = jobsOf(Tables.names.foreach(t => Tables.load(spark, sf01, t)))
+    val n = jobsIn(Tables.names.foreach(t => Tables.load(spark, sf01, t)))
     assert(n == 0, s"loading the ten sf0.01 tables ran $n Spark job(s)")
   }
 
@@ -113,7 +75,7 @@ class TablesSpec extends SparkTestBase {
         .repartition(3)
         .write.parquet(Tables.path(dir, "documents"))
       assert(new java.io.File(Tables.path(dir, "documents"), "_SUCCESS").exists)
-      assert(jobsOf(Tables.load(spark, dir, "documents")) == 0)
+      assert(jobsIn(Tables.load(spark, dir, "documents")) == 0)
       assertLoadsAsInferred(dir, "documents")
     }
   }
@@ -127,7 +89,7 @@ class TablesSpec extends SparkTestBase {
         .withColumn("ts", col("ts").cast(tsType))
         .coalesce(1).write.parquet(Tables.path(dir, "events"))
       assert(inferredRaw(dir, "events").schema("ts").dataType == tsType)
-      assert(jobsOf(Tables.load(spark, dir, "events")) == 0, tsType)
+      assert(jobsIn(Tables.load(spark, dir, "events")) == 0, tsType)
       assertLoadsAsInferred(dir, "events")
       assert(Tables.load(spark, dir, "events").schema("ts").dataType ==
         TimestampType)
@@ -149,7 +111,7 @@ class TablesSpec extends SparkTestBase {
           |""".stripMargin
       assert(Seq("python3", "-c", script, Tables.path(dir, "events")).! == 0)
       assert(inferredRaw(dir, "events").schema("ts").dataType == LongType)
-      assert(jobsOf(Tables.load(spark, dir, "events")) == 0)
+      assert(jobsIn(Tables.load(spark, dir, "events")) == 0)
       assertLoadsAsInferred(dir, "events")
       val us = Tables.load(spark, dir, "events").orderBy("event_id")
         .select(unix_micros(col("ts"))).collect().map(_.getLong(0)).toSeq
