@@ -272,7 +272,8 @@ class EngineSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("graft_fold")
     try {
       val dir = tmp.toString
-      Tables.load(spark, "/root/testdata/sf0.01", "lineitem")
+      val sf01 = new java.io.File(sf).getParent + "/sf0.01"
+      Tables.load(spark, sf01, "lineitem")
         .repartition(4).write.parquet(Tables.path(dir, "lineitem"))
       val big = Catalog.engine(spark, dir)
       val want = Tables.load(spark, dir, "lineitem")

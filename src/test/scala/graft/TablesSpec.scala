@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
   * Spark-written directory and for every `events.ts` vintage.
   */
 class TablesSpec extends SparkTestBase {
-  private val sf01 = "/root/testdata/sf0.01"
+  // the sf0.01 fixture, beside the suite's default sf0.001 one
+  private val sf01 = new java.io.File(sf).getParent + "/sf0.01"
 
   /** The table as Spark's schema inference reads it (`loadEvents`
     * sets `nanosAsLong` before its read; so does this). */
