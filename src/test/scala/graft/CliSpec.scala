@@ -51,18 +51,30 @@ class CliSpec extends SparkTestBase {
   }
 
   test("query verb streams a large multi-partition result completely") {
-    spark
     // ~60k JSON lines: collect() used to materialize all of this on
     // the driver at once; toLocalIterator streams it partition by
     // partition — the transcript must still be complete and ordered
-    // within Spark's partition iteration
-    val out = run("query", "-sf", "/root/testdata/sf0.01",
-      "select l_orderkey, l_linenumber from lineitem")
-    val lines = out.linesIterator.toSeq
-    val want = Tables.load(spark, "/root/testdata/sf0.01", "lineitem").count()
-    assert(lines.length == want, s"${lines.length} lines vs $want rows")
-    assert(lines.forall(l => l.startsWith("{\"l_orderkey\":") &&
-      l.contains("\"l_linenumber\":")))
+    // within Spark's partition iteration. The fixture's lineitem is one
+    // row group, so one partition; a 4-file copy of it gives the result
+    // 4 partitions to stream.
+    val tmp = Files.createTempDirectory("graft_cli_query")
+    try {
+      val dir = tmp.toString
+      val sf01 = new java.io.File(sf).getParent + "/sf0.01"
+      Tables.load(spark, sf01, "lineitem")
+        .repartition(4).write.parquet(Tables.path(dir, "lineitem"))
+      val src = "select l_orderkey, l_linenumber from lineitem"
+      val parts = Catalog.engine(spark, dir).sql(src).rdd.getNumPartitions
+      assert(parts >= 2, s"the result has $parts partition(s)")
+      val lines = run("query", "-sf", dir, src).linesIterator.toSeq
+      val want = Tables.load(spark, sf01, "lineitem").count()
+      assert(lines.length == want, s"${lines.length} lines vs $want rows")
+      assert(lines.forall(l => l.startsWith("{\"l_orderkey\":") &&
+        l.contains("\"l_linenumber\":")))
+    } finally {
+      Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
+        .forEach(Files.delete(_))
+    }
   }
 
   test("migrate-show prints a migration's DDL") {

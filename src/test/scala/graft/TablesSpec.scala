@@ -2,14 +2,19 @@ package graft
 
 import java.nio.file.Files
 import java.util.Comparator
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** `Tables.load` reads each parquet footer on the driver: it runs no
   * Spark job, and the frame it returns has the schema and rows that
   * letting Spark infer the schema gives, for the fixtures, for a
-  * Spark-written directory and for every `events.ts` vintage.
+  * Spark-written directory, for files with several row groups or none,
+  * and for every `events.ts` vintage.
   */
 class TablesSpec extends SparkTestBase {
   // the sf0.01 fixture, beside the suite's default sf0.001 one
@@ -78,6 +83,53 @@ class TablesSpec extends SparkTestBase {
       assert(new java.io.File(Tables.path(dir, "documents"), "_SUCCESS").exists)
       assert(jobsIn(Tables.load(spark, dir, "documents")) == 0)
       assertLoadsAsInferred(dir, "documents")
+    }
+  }
+
+  /** The number of row groups in the footer of `p`'s first data file. */
+  private def rowGroups(p: String): Int = {
+    val dir = new java.io.File(p)
+    val file = dir.listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).min
+    val conf = spark.sessionState.newHadoopConf()
+    ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(new Path(p, file), conf),
+      ParquetMetadataConverter.NO_FILTER).getBlocks.size
+  }
+
+  /** A Spark-written table loads as inferred, with no job, and its
+    * footer schema alone equals the inferred one (the columns are
+    * nullable, so the reader's nullability widening changes nothing). */
+  private def assertSparkWrittenLoads(dir: String, name: String): Unit = {
+    val p = Tables.path(dir, name)
+    assert(Tables.footerSchema(spark, p) === spark.read.parquet(p).schema)
+    assert(jobsIn(Tables.load(spark, dir, name)) == 0)
+    assertLoadsAsInferred(dir, name)
+  }
+
+  test("a Spark-written file with several row groups loads from its footer") {
+    import spark.implicits._
+    withTempDir { dir =>
+      (1 to 5000).map(i => (Option(i.toLong), Option(s"row-$i"),
+          if (i % 7 == 0) None else Some(i * 0.5)))
+        .toDF("k", "s", "x")
+        .coalesce(1).write.option("parquet.block.size", 4096L)
+        .parquet(Tables.path(dir, "orders"))
+      val groups = rowGroups(Tables.path(dir, "orders"))
+      assert(groups >= 2, s"the file has $groups row group(s)")
+      assertSparkWrittenLoads(dir, "orders")
+      assert(Tables.load(spark, dir, "orders").count() == 5000)
+    }
+  }
+
+  test("an empty Spark-written table (no row groups) loads from its footer") {
+    import spark.implicits._
+    withTempDir { dir =>
+      Seq.empty[(Option[Long], Option[String])].toDF("k", "s")
+        .write.parquet(Tables.path(dir, "orders"))
+      assert(rowGroups(Tables.path(dir, "orders")) == 0)
+      assertSparkWrittenLoads(dir, "orders")
+      assert(Tables.load(spark, dir, "orders").isEmpty)
     }
   }
 
