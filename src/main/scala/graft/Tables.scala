@@ -20,11 +20,11 @@ import org.apache.spark.sql.types.StructType
   * groups skipped, under the session's Hadoop conf; parquet-hadoop's
   * `ParquetFileReader.open(InputFile)` is avoided because it builds
   * its read options from a fresh Hadoop `Configuration`, re-parsing
-  * `core-default.xml` on every call (~12 ms a footer against ~0.7 ms
-  * on a warm JVM at sf0.01). The schema is the file's physical one,
-  * not the DDL's (`Catalog.ddl`): INT32 columns stay INT, undeclared
-  * columns stay, and `events.ts` keeps the shape [[normalizeTs]]
-  * dispatches on.
+  * `core-default.xml` on every call (7.4 ms a footer at the median
+  * against 0.31 ms, warm JVM, sf0.01, 4 cores). The schema is the
+  * file's physical one, not the DDL's (`Catalog.ddl`): INT32 columns
+  * stay INT, undeclared columns stay, and `events.ts` keeps the shape
+  * [[normalizeTs]] dispatches on.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -57,10 +57,12 @@ object Tables {
     val status = fs.getFileStatus(path)
     val file =
       if (!status.isDirectory) status
-      else fs.listStatus(path).iterator.filterNot { f =>
+      else fs.listStatus(path).iterator
+        .filterNot { f =>
           val n = f.getPath.getName
           n.startsWith("_") || n.startsWith(".")
-        }.minByOption(_.getPath.getName)
+        }
+        .minByOption(_.getPath.getName)
         .getOrElse(throw new IllegalArgumentException(
           s"no parquet data file under $p"))
     val footer = ParquetFooterReader.readFooter(
